@@ -1,0 +1,2 @@
+"""Repository benchmark: dedup workloads with end-to-end and per-layer
+metrics. Entry point: ``python3 perfbench/run.py`` (see README.md)."""

@@ -32,41 +32,6 @@ class PipelineConfig:
     substring_w: int = 49
     # skew handling
     bucket_cap: int = 256
-    # checkpoint the exploded band table as its own stage. Default off:
-    # bands are ONE narrow map over the signatures checkpoint (explode of
-    # band hashes), so a resume re-derives them in seconds, while the
-    # checkpoint costs a full write+read of 32 rows/doc every run
-    # (~260 MB + ~13 s per 1M docs)
-    checkpoint_bands: bool = False
-    # opt-in single-posexplode bucket build (one long-array concat +
-    # positional band_id/src decode) instead of the default 4-branch
-    # union. Interleaved A/B at 4M docs / 302M bucket rows (local[32],
-    # tools/bucket_build_ab.py): union median 41.4 s vs fused 68.4 s —
-    # the per-row concat + CASE decode loses to extra codegen branches
-    # on a columnar source. Kept for re-testing on real clusters where
-    # the branch-per-scan cost of remote parquet may flip the verdict.
-    fused_bucket_build: bool = False
-    # opt-in sort-free candidate pass: replace the bucket window
-    # (WindowExec sorts every shuffle partition of the job's largest
-    # relation) with ONE collect_list hash aggregate + in-array salting
-    # (operators/lsh.py::candidate_pairs_hashagg — value-identical pair
-    # set, pytest-pinned). Off by default because the aggregation
-    # buffer grows with the largest bucket (the salted window bounds it
-    # at ~bucket_cap ids) — enable when the corpus' hot-bucket ceiling
-    # is known to fit executor memory. The pipeline raises Spark's
-    # ObjectHashAggregate sort-fallback threshold alongside its pairs
-    # partition tuner when this is on.
-    hashagg_candidates: bool = False
-    # storage/bandwidth: the corpus-wide shingle-set column is the largest
-    # intermediate (≈2× the text bytes). False (default) = keep normalized
-    # text in the signatures checkpoint instead and re-derive shingle sets
-    # at verify time for candidate-involved docs only — the right trade
-    # whenever candidates ≪ corpus (always true at web scale). Measured on
-    # the fixed 4M-doc input, local[32]/local[8] (docs/SCALE.md has the
-    # table): False wins at every core count (254 s vs 406 s at 32 cores),
-    # with identical canonical output. True only pays off below ~10^5 docs,
-    # where the extra verify-time UDF pass outweighs the smaller S1 write.
-    store_shingles: bool = False
     # pairs-stage scratch intermediates (candidate pairs, candidate
     # shingle sets — each read by 2+ downstream consumers) spill to
     # parquet above this doc count, localCheckpoint at or below it:
@@ -173,27 +138,6 @@ def from_args(argv: list[str] | None = None) -> PipelineConfig:
     p.add_argument("--no-substring", action="store_false", dest="enable_substring")
     p.add_argument("--bucket-cap", type=int, default=256)
     p.add_argument("--nid-bits", type=int, default=64, choices=[64, 128], dest="nid_bits")
-    p.add_argument(
-        "--store-shingles", action="store_true", dest="store_shingles",
-        help="materialize the corpus-wide shingle-set column in the "
-        "signatures checkpoint instead of re-deriving sets at verify "
-        "time for candidate-involved docs (only worth it on tiny "
-        "corpora; see docs/SCALE.md crossover table)",
-    )
-    p.add_argument(
-        "--fused-bucket-build", action="store_true",
-        dest="fused_bucket_build",
-        help="single-posexplode bucket build instead of the default "
-        "4-branch union (union won the 4M local A/B; this may flip on "
-        "clusters scanning remote parquet once per branch)",
-    )
-    p.add_argument(
-        "--hashagg-candidates", action="store_true",
-        dest="hashagg_candidates",
-        help="sort-free candidate pass (collect_list hash aggregate "
-        "instead of the bucket window; value-identical pairs). Use "
-        "when the hot-bucket ceiling is known to fit executor memory",
-    )
     p.add_argument(
         "--resolve",
         default="source_order,path_depth,copy_pattern,mod_date,arbitrary",

@@ -97,8 +97,9 @@ def minhash_batch(
         lo, hi = offsets[d0], ends[d1 - 1]
         sub = flat[lo:hi]
         offs_rel = offsets[d0:d1] - lo
-        vv = v if len(v) >= hi - lo else np.empty(hi - lo, dtype=np.uint64)
-        vv = vv[: hi - lo]
+        if len(v) < hi - lo:  # oversized group: grow, and keep for reuse
+            v = np.empty(hi - lo, dtype=np.uint64)
+        vv = v[: hi - lo]
         for i in range(num_perm):
             np.multiply(a[i], sub, out=vv)
             np.add(vv, b[i], out=vv)
@@ -165,13 +166,13 @@ def signature_struct_udf(
     with_simhash: bool = True,
     substr_k: int | None = None,
     substr_w: int | None = None,
-    with_shingles: bool = True,
 ):
-    """(token-hash array, normalized text) → struct(shingles, minhash,
-    simhash[, substr_fp]).
+    """(token-hash array, normalized text) → struct(minhash, simhash[,
+    substr_fp]).
 
-    One Python round trip computes every per-document signature:
-    - shingles:  distinct k-gram mixed hashes (verification sets)
+    One Python round trip computes every per-document signature from
+    the distinct k-gram mixed hashes (the shingle set, which verify
+    re-derives with shingle_set_udf rather than storing):
     - minhash:   num_perm multiply-shift minima
     - simhash:   64-bit bit-vote fingerprint
     - substr_fp: winnowed rolling-hash substring fingerprints (when
@@ -182,10 +183,7 @@ def signature_struct_udf(
 
     a, b = _perm_params(num_perm, seed)
     with_substr = substr_k is not None and substr_w is not None
-    fields = []
-    if with_shingles:
-        fields.append(T.StructField("shingles", T.ArrayType(T.LongType())))
-    fields += [
+    fields = [
         T.StructField("minhash", T.ArrayType(T.IntegerType())),
         T.StructField("simhash", T.LongType()),
     ]
@@ -204,11 +202,8 @@ def signature_struct_udf(
         sh = simhash_batch(grams) if with_simhash else pd.Series(
             np.zeros(len(grams), dtype=np.int64)
         )
-        # numpy arrays pass through Arrow without per-int Python boxing;
-        # shingle sets (the widest output) ship back only when stored
+        # numpy arrays pass through Arrow without per-int Python boxing
         out = {"minhash": mh, "simhash": sh}
-        if with_shingles:
-            out["shingles"] = grams
         if with_substr:
             from dedupe_trees_spark.operators.substring import winnow_text_fps
 
@@ -222,12 +217,11 @@ def signature_struct_udf(
 def shingle_set_udf(shingle_k: int = 3):
     """token-hash array → distinct k-gram shingle hashes only.
 
-    Used by the verify join when the pipeline runs with
-    ``store_shingles=False``: shingle sets are re-derived for the
+    Used by the verify join: shingle sets are re-derived for the
     (small) set of candidate-involved docs instead of writing the
     corpus-wide shingle column — the single largest intermediate —
-    to the signatures checkpoint. Must stay bit-identical to the
-    ``shingles`` field of signature_struct_udf (same gram_mix).
+    to the signatures checkpoint. Must stay bit-identical to the sets
+    signature_struct_udf hashes into minhash/simhash (same gram_mix).
     """
 
     @F.pandas_udf(T.ArrayType(T.LongType()))

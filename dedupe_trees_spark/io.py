@@ -128,8 +128,8 @@ def marked(ckpt_dir: str, stage: str, name: str) -> bool:
     return os.path.exists(target)
 
 
-def local_ckpt(df, eager: bool = True):
-    """``df.localCheckpoint(eager)`` plus handles to the RDDs it
+def local_ckpt(df):
+    """``df.localCheckpoint()`` (eager) plus handles to the RDDs it
     actually pinned. ``DataFrame.unpersist()`` only talks to the SQL
     CacheManager and is a NO-OP for localCheckpoint's RDD-level blocks,
     so callers that must release them (cache hygiene is a tested
@@ -138,17 +138,11 @@ def local_ckpt(df, eager: bool = True):
     nothing else persists concurrently). Returns (checkpointed_df,
     [handles]); call ``h.unpersist()`` on each handle once every
     consumer has materialized (the lineage is truncated: blocks dropped
-    earlier are unrecomputable and later reads fail).
-
-    ``eager=False`` defers materialization to the first consuming
-    action (the RDD is registered — and the handle diff works — at
-    call time either way, probe-verified): callers that immediately
-    run an action over the frame anyway (the CC loop's convergence
-    signature) save one full job per call."""
+    earlier are unrecomputable and later reads fail)."""
     spark = df.sparkSession
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=eager)
+    out = df.localCheckpoint()
     jmap = jsc.getPersistentRDDs()
     handles = [jmap.get(k) for k in jmap.keySet().toArray() if k not in before]
     return out, handles

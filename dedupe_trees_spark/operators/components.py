@@ -112,12 +112,15 @@ def _driver_cc_supported(edges: DataFrame) -> bool:
     """The driver fast path handles atomic id types whose Python/NumPy
     ordering matches Spark's column ordering: integers trivially, and
     strings because Python's code-point comparison equals UTF-8 byte
-    comparison (UTF-8 is order-preserving). Struct ids (nid_bits=128)
-    keep the distributed loop."""
+    comparison (UTF-8 is order-preserving) — but only under the binary
+    collation; any other collation (e.g. UTF8_LCASE) orders differently.
+    Struct ids (nid_bits=128) keep the distributed loop."""
     from pyspark.sql import types as T
 
     t = edges.schema["u"].dataType
-    return isinstance(t, (T.LongType, T.IntegerType, T.ShortType, T.StringType))
+    if isinstance(t, T.StringType):
+        return t.collation == "UTF8_BINARY"
+    return isinstance(t, (T.LongType, T.IntegerType, T.ShortType))
 
 
 def _driver_cc(edges: DataFrame) -> DataFrame:

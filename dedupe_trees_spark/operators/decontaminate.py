@@ -218,7 +218,8 @@ def top_ngrams(
 #     candidate pairs broadcast onto ONE further corpus scan that
 #     computes sets only, so the fat set column is consumed
 #     pipeline-locally and never rides an exchange — the same
-#     store_shingles=False discipline as the pipeline's verify join.
+#     discipline as the pipeline's verify join, which re-derives sets
+#     for candidate docs instead of storing them.
 # Skew: a band key's fan-out is bounded by (corpus rows in key) x (eval
 # rows in key); the eval side is small and pre-distinct per key, so the
 # probe join cannot produce a quadratic bucket the way a corpus

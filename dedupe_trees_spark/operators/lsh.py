@@ -213,141 +213,6 @@ def candidate_pairs(
     return out.dropDuplicates(["url_a", "url_b"])
 
 
-def candidate_pairs_hashagg(
-    bands_df: DataFrame,
-    id_col: str = "url",
-    cap: int = 256,
-    star_srcs: int = 0,
-    src_from_band=None,
-) -> DataFrame:
-    """Sort-free twin of :func:`candidate_pairs` — identical pair set,
-    different physical plan. **Measured verdict: the window build wins
-    decisively; this stays an opt-in research path** (interleaved A/B
-    at 4 M docs / 302 M bucket rows, local[32]: window candidates
-    80.4 s; hashagg DNF'd >14 min at BOTH 2 M- and 500 k-row partition
-    targets — see BENCH/BASELINE.md "sort-free candidate pass"). The
-    reason is structural, not tunable: a bucket table is ~1 group per
-    row, so ObjectHashAggregate materializes one mutable list buffer
-    per row — ~300 M small JVM objects — while the window's sort runs
-    over Tungsten binary rows with no per-group allocation at all.
-    "Avoid the sort" is only a win when groups are fat; at singleton-
-    dominated key distributions the sort IS the fast path.
-
-    The window pass above is ONE exchange, but WindowExec sorts every
-    shuffle partition by (band_id, band_hash) — a full sort of the
-    bucket table (1.2 G rows at 16 M docs) whose only purpose is to
-    cluster equal keys for count/min. This variant replaces the
-    window + chained groupBy with a single ``groupBy(band_id,
-    band_hash).agg(collect_list(id))`` — same ONE exchange, but an
-    ObjectHashAggregate instead of sort+window: equal keys cluster in
-    a hash map, no ordering ever materialized. Salting moves from the
-    row domain into the aggregated array domain: per hot bucket the
-    salt groups are re-derived with the SAME ``pmod(xxhash64(id),
-    ceil(n/cap))`` assignment via higher-order filters over the id
-    array, and the per-group star (member → salt-group min → bucket
-    min) is emitted from the same expressions ``candidate_pairs``
-    uses, so the emitted pair set is value-identical (pytest-pinned,
-    both topology and srcs bits).
-
-    The trade, stated for the 10^12-doc regime:
-
-    - window mode bounds every aggregation buffer at ~``cap`` ids (the
-      salt is part of the grouping key). Hash mode collects the WHOLE
-      bucket into one array first — per-bucket memory is m·8 B, so a
-      pathological 10^8-member bucket holds ~800 MB in one buffer.
-      Safe whenever the hot-bucket ceiling is known (the 16 M input's
-      hottest bucket is ~80 k members = 640 KB); the window build
-      stays the default for unaudited corpora.
-    - hot buckets pay O(m·ceil(m/cap)) lambda evaluations to split the
-      array into salt groups (g filter passes) vs the window's one
-      xxhash per row. Cold buckets — the overwhelming mass — pay
-      nothing extra. At 16 M docs the hot rows are ~0.3% of the bucket
-      table.
-    - callers MUST raise ``spark.sql.objectHashAggregate.sortBased.
-      fallbackThreshold`` (default 128 map entries) or Spark silently
-      falls back to sort-based aggregation and the sort returns; the
-      pipeline sets it alongside its pairs-stage partition tuner.
-
-    Empty salt groups (a hash residue no id maps to) emit a
-    (bucket_min, bucket_min) self-pair — ``least``/``greatest`` skip
-    the null rep — which the existing a≠b filter drops; no special
-    casing.
-    """
-    if src_from_band is not None:
-        bands_df = bands_df.drop("src")  # see candidate_pairs docstring
-    has_src = "src" in bands_df.columns or src_from_band is not None
-    src_cols = ["src"] if has_src else []
-    # explicit repartition on the bucket key, NOT a bare groupBy: a bare
-    # groupBy plans a map-side partial collect_list over the scan's
-    # partitioning — tens of millions of (mostly singleton) groups per
-    # map task, each wrapped in a list buffer, i.e. a memory blowup AND
-    # a buffer-fattened shuffle. With the child already hash-partitioned
-    # on the grouping key the exchange carries raw narrow rows and the
-    # aggregation hash map only ever holds one shuffle partition's
-    # groups (~est rows/partition, which the fallback-threshold bound in
-    # the pipeline tuner is sized to).
-    grouped = (
-        bands_df.repartition(F.col("band_id"), F.col("band_hash"))
-        .groupBy("band_id", "band_hash")
-        .agg(
-            F.collect_list(id_col).alias("_raw"),
-            *([F.first("src").alias("src")] if has_src and src_from_band is None else []),
-        )
-        .filter(F.size("_raw") >= 2)
-    )
-    if src_from_band is not None:
-        grouped = grouped.withColumn("src", src_from_band)
-    n = F.size("_raw")
-    ids = F.array_distinct(F.col("_raw"))
-    bmin = F.array_min(F.col("_raw"))
-    g = F.ceil(n / F.lit(cap)).cast("long")
-
-    all_pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: _pair_struct(x, y),
-            ),
-        )
-    )
-
-    def salt_group_star(s):
-        grp = F.filter(ids, lambda x: F.pmod(F.xxhash64(x), g) == s)
-        rep = F.array_min(grp)
-        return F.concat(
-            F.transform(
-                F.filter(grp, lambda x: x != rep),
-                lambda x: _pair_struct(x, rep),
-            ),
-            F.array(_pair_struct(rep, bmin)),
-        )
-
-    salted_star = F.flatten(
-        F.transform(F.sequence(F.lit(0).cast("long"), g - 1), salt_group_star)
-    )
-
-    # star-src buckets use the salted-star expression even when cold:
-    # g = ceil(n/cap) = 1 there, so it reduces to exactly the single
-    # star the window build emits for its one salt-0 group.
-    is_cold = n <= F.lit(cap)
-    if has_src and star_srcs:
-        is_cold = is_cold & (F.col("src").bitwiseAND(F.lit(star_srcs)) == 0)
-    out = (
-        grouped.select(
-            *src_cols,
-            F.explode(F.when(is_cold, all_pairs).otherwise(salted_star)).alias("_p"),
-        )
-        .filter(F.col("_p.a") != F.col("_p.b"))
-        .select(
-            F.col("_p.a").alias("url_a"), F.col("_p.b").alias("url_b"), *src_cols
-        )
-    )
-    if has_src:
-        return out.groupBy("url_a", "url_b").agg(F.bit_or("src").alias("srcs"))
-    return out.dropDuplicates(["url_a", "url_b"])
-
-
 def jaccard_expr(a, b):
     """Exact Jaccard of two pre-distinct arrays, JVM-side."""
     inter = F.size(F.array_intersect(a, b))

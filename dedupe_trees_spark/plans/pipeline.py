@@ -1,12 +1,11 @@
 """The end-to-end dedup pipeline (SURVEY.md §3.2 lifecycle):
 
-    S1 signatures:  pages → (url, nid, meta, content_hash, shingles,
+    S1 signatures:  pages → (url, nid, meta, content_hash, norm,
                              minhash, simhash, substr_fp)  [checkpoint]
-    S2 bands:       signatures → (nid, band_id, band_hash)
-                    [checkpoint only with cfg.checkpoint_bands — bands
-                    are one narrow map over S1, so by default they are
-                    derived inline by S3 instead of paying a full
-                    write+read of 32 rows/doc]
+    S2 bands:       signatures → (nid, band_id, band_hash), derived
+                    inline by S3 — one narrow map over S1, so it is
+                    never checkpointed (a write+read of 32 rows/doc
+                    would cost more than re-deriving it on resume)
     S3 pairs:       exact ∪ minhash ∪ simhash ∪ substr edges, verified
                                                            [checkpoint]
     S4 components:  connected components over pairs        [checkpoint]
@@ -46,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dedupe_trees_spark.config import PipelineConfig
-from dedupe_trees_spark.functions.minhash import signature_struct_udf
+from dedupe_trees_spark.functions.minhash import shingle_set_udf, signature_struct_udf
 from dedupe_trees_spark.functions.text import content_hash, normalize_text, token_hashes
 from dedupe_trees_spark.io import (
     read_pages,
@@ -59,13 +58,12 @@ from dedupe_trees_spark.operators import resolve as R
 from dedupe_trees_spark.operators.components import assign_components
 from dedupe_trees_spark.operators.lsh import (
     candidate_pairs,
-    candidate_pairs_hashagg,
     explode_bands,
     jaccard_expr,
 )
 from dedupe_trees_spark.plans.lineage import record_stage
 
-STAGES = ["signatures", "bands", "pairs", "components", "canonical"]
+STAGES = ["signatures", "pairs", "components", "canonical"]
 
 # bucket-provenance bit flags (candidate_pairs bit_or's them per pair)
 SRC_MINHASH, SRC_SIMHASH, SRC_SUBSTR, SRC_EXACT = 1, 2, 4, 8
@@ -75,7 +73,7 @@ def src_from_band_expr(cfg: PipelineConfig):
     """band_id → provenance flag, inverting build_bucket_table's fixed
     namespace layout (minhash [0, bands), simhash [bands, bands+10),
     substr bands+10, exact bands+11). Passing this to candidate_pairs
-    lets the fused bucket table shed its src column before the pairs
+    lets the bucket table shed its src column before the pairs
     window exchange — the job's largest shuffle — and recompute it from
     the grouping key afterwards (guide §2.3); the emitted pairs are
     value-identical (pytest-pinned)."""
@@ -151,27 +149,22 @@ def build_signatures(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         with_simhash=cfg.enable_simhash,
         substr_k=cfg.substring_k if cfg.enable_substring else None,
         substr_w=cfg.substring_w if cfg.enable_substring else None,
-        with_shingles=cfg.store_shingles,
     )
     df = df.withColumn("_sig", sig(token_hashes("norm"), F.col("norm")))
     df = df.withColumn("minhash", F.col("_sig.minhash")).withColumn(
         "simhash", F.col("_sig.simhash")
     )
-    if cfg.store_shingles:
-        df = df.withColumn("shingles", F.col("_sig.shingles"))
     if cfg.enable_substring:
         df = df.withColumn("substr_fp", F.col("_sig.substr_fp"))
     df = df.drop("_sig")
     if not cfg.enable_simhash:
         df = df.drop("simhash")
-    # store_shingles=False keeps `norm` (3× smaller than the shingle
-    # column) so verify can re-derive sets for candidate docs only
-    return df if not cfg.store_shingles else df.drop("norm")
+    # `norm` stays instead of a shingle-set column (3× smaller) so
+    # verify can re-derive sets for candidate docs only
+    return df
 
 
-def build_bucket_table(
-    sigs: DataFrame, cfg: PipelineConfig, bands_df: DataFrame | None = None
-) -> DataFrame:
+def build_bucket_table(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """FUSED candidate generation input: ALL FOUR generators' buckets
     go through ONE candidate_pairs pass — one bucket-count window, one
     per-bucket aggregation, one dedup — instead of separate passes
@@ -186,28 +179,12 @@ def build_bucket_table(
     Exact buckets always use star topology (star_srcs): members
     are byte-identical, so no verification prunes their edges and
     m−1 edges carry the component — same shape exact_edges() used
-    as a standalone stage. ``bands_df`` lets the pipeline pass its
-    checkpointed band table; None derives bands inline.
+    as a standalone stage.
 
-    Physical shape: two value-identical builds exist (pytest-pinned
-    equal). The DEFAULT is the 4-branch union below — each generator
-    is its own narrow codegen pipeline over the S1 scan into the
-    shared exchange. The alternative ``cfg.fused_bucket_build`` path
-    (_build_bucket_table_fused) concatenates all sources into one
-    long array and posexplodes once, recovering band_id/src from the
-    position with int CASE chains; it was built for round-4 verdict
-    item #3 (map-side build = 63% of the 16 M candidates kernel) on
-    the theory that scan multiplicity was the lever — but the
-    interleaved A/B at 4 M docs / 302 M bucket rows (local[32],
-    tools/bucket_build_ab.py) measured union medians 41.4 s vs fused
-    68.4 s: the per-row array concat + CASE-chain decode costs more
-    than the extra codegen branches over a cached/columnar source,
-    where each branch prunes to only the columns it explodes. Union
-    stays default; the fused path stays available for re-testing on
-    other substrates (a real cluster scanning remote parquet once
-    per branch may flip the verdict)."""
-    if bands_df is None and cfg.fused_bucket_build:
-        return _build_bucket_table_fused(sigs, cfg)
+    Physical shape: a 4-branch union — each generator is its own
+    narrow codegen pipeline over the S1 scan into the shared exchange,
+    pruned to only the columns it explodes. It beat a single-posexplode
+    build 41.4 s to 68.4 s at 4 M docs (BENCH/BASELINE.md, round 5)."""
     bucket_frames = [
         sigs.select(
             "nid",
@@ -217,13 +194,12 @@ def build_bucket_table(
         )
     ]
     if cfg.enable_minhash:
-        if bands_df is None:
-            bands_df = explode_bands(
-                sigs, sig_col="minhash", id_col="nid",
-                bands=cfg.bands, rows=cfg.rows_per_band,
-            )
+        bands = explode_bands(
+            sigs, sig_col="minhash", id_col="nid",
+            bands=cfg.bands, rows=cfg.rows_per_band,
+        )
         bucket_frames.append(
-            bands_df.select(
+            bands.select(
                 "nid", "band_id", "band_hash",
                 F.lit(SRC_MINHASH).alias("src"),
             )
@@ -261,59 +237,6 @@ def build_bucket_table(
     for bfr in bucket_frames[1:]:
         fused = fused.unionByName(bfr)
     return fused
-
-
-def _build_bucket_table_fused(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Single-pass bucket build (see build_bucket_table docstring):
-    one long-array concat in a fixed layout, one posexplode, band_id
-    and src recovered from the position. Value-identical rows to the
-    union formulation — band hashes reuse the exact same expressions
-    (band_hash_array / simhash_block_keys), so resume compatibility
-    and the DuckDB oracles are unaffected."""
-    from dedupe_trees_spark.functions.minhash import band_hash_array
-    from dedupe_trees_spark.functions.simhash import simhash_block_keys
-
-    arrs = [F.array(F.col("content_hash"))]
-    pos = F.col("pos")
-    # (condition, band_id) in layout order; the matching src constant
-    # shares each condition so the two CASE chains stay in lockstep
-    conds: list[tuple] = [(pos == 0, F.lit(cfg.bands + 11), SRC_EXACT)]
-    nfixed = 1
-    if cfg.enable_minhash:
-        arrs.append(band_hash_array("minhash", cfg.bands, cfg.rows_per_band))
-        conds.append(
-            (pos <= nfixed + cfg.bands - 1, pos - nfixed, SRC_MINHASH)
-        )
-        nfixed += cfg.bands
-    if cfg.enable_simhash:
-        arrs.append(
-            simhash_block_keys("simhash", d=cfg.simhash_max_hamming)
-        )
-        # 10 probe tables (C(5,2) block pairs); table id t = pos - nfixed
-        conds.append(
-            (pos <= nfixed + 9, pos - nfixed + cfg.bands, SRC_SIMHASH)
-        )
-        nfixed += 10
-    if cfg.enable_substring:
-        # variable-length segment — MUST stay last so the fixed
-        # segments' position ranges are compile-time constants.
-        # Distinct by construction (winnow_text_fps ends in np.unique).
-        arrs.append(F.col("substr_fp"))
-        conds.append((F.lit(True), F.lit(cfg.bands + 10), SRC_SUBSTR))
-
-    band_id = F.when(conds[0][0], conds[0][1])
-    src = F.when(conds[0][0], F.lit(conds[0][2]))
-    for c, bid, s in conds[1:]:
-        band_id = band_id.when(c, bid)
-        src = src.when(c, F.lit(s))
-    return sigs.select(
-        "nid", F.posexplode(F.concat(*arrs)).alias("pos", "band_hash")
-    ).select(
-        "nid",
-        band_id.cast("int").alias("band_id"),
-        "band_hash",
-        src.cast("int").alias("src"),
-    )
 
 
 def score_candidates(
@@ -362,22 +285,15 @@ def score_candidates(
             .unionByName(ver.select(F.col("url_b").alias("nid")))
             .dropDuplicates(["nid"])
         )
-        if "shingles" in sigs.columns:
-            sets = sigs.join(cand_nids, "nid", "left_semi").select(
-                "nid", "shingles", *sim_cols
-            )
-        else:
-            # shingle sets were not stored (store_shingles=False):
-            # re-derive them for candidate docs only.
-            from dedupe_trees_spark.functions.minhash import shingle_set_udf
-
-            sets = sigs.join(cand_nids, "nid", "left_semi").select(
-                "nid",
-                shingle_set_udf(cfg.shingle_k)(token_hashes("norm")).alias(
-                    "shingles"
-                ),
-                *sim_cols,
-            )
+        # S1 stores `norm`, not shingle sets: re-derive them for
+        # candidate docs only
+        sets = sigs.join(cand_nids, "nid", "left_semi").select(
+            "nid",
+            shingle_set_udf(cfg.shingle_k)(token_hashes("norm")).alias(
+                "shingles"
+            ),
+            *sim_cols,
+        )
         # two join consumers (a/b side) — materialize once
         if spill is not None:
             sets = spill(sets, "sets")
@@ -455,19 +371,6 @@ class DedupePipeline:
             pages = preclean_paragraphs(pages, sep=self.cfg.paragraph_sep)
         return build_signatures(pages, self.cfg)
 
-    def _build_bands(self) -> DataFrame:
-        cfg = self.cfg
-        sigs = read_stage(self.spark, cfg.ckpt_dir, "signatures")
-        return explode_bands(
-            sigs, sig_col="minhash", id_col="nid", bands=cfg.bands, rows=cfg.rows_per_band
-        )
-
-    # bucket-provenance bit flags (module-level constants; kept as class
-    # attributes for the existing call sites and tests)
-    SRC_MINHASH, SRC_SIMHASH, SRC_SUBSTR, SRC_EXACT = (
-        SRC_MINHASH, SRC_SIMHASH, SRC_SUBSTR, SRC_EXACT,
-    )
-
     def _sig_doc_count(self) -> int:
         """Doc count from the committed S1 lineage manifests (parquet
         footer metadata — no scan); 0 when unavailable."""
@@ -503,16 +406,6 @@ class DedupePipeline:
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
-    def _bucket_table(self, sigs: DataFrame) -> DataFrame:
-        """See ``build_bucket_table`` — the pipeline passes its
-        checkpointed band table when ``checkpoint_bands`` is on."""
-        bands = (
-            read_stage(self.spark, self.cfg.ckpt_dir, "bands")
-            if (self.cfg.enable_minhash and self.cfg.checkpoint_bands)
-            else None
-        )
-        return build_bucket_table(sigs, self.cfg, bands_df=bands)
-
     def _scratch_dir(self) -> str:
         return self.cfg.scratch_dir or f"{self.cfg.ckpt_dir}/_scratch"
 
@@ -526,13 +419,9 @@ class DedupePipeline:
 
         # url_a/url_b column names are the pair-plumbing convention; from
         # here on they carry compact nids, not url strings
-        fused = self._bucket_table(sigs)
-        cand_fn = (
-            candidate_pairs_hashagg if cfg.hashagg_candidates else candidate_pairs
-        )
-        cands = cand_fn(
-            fused, id_col="nid", cap=cfg.bucket_cap, star_srcs=self.SRC_EXACT,
-            src_from_band=src_from_band_expr(cfg),
+        cands = candidate_pairs(
+            build_bucket_table(sigs, cfg), id_col="nid", cap=cfg.bucket_cap,
+            star_srcs=SRC_EXACT, src_from_band=src_from_band_expr(cfg),
         )
         # cands feeds the edge assembly AND the candidate-nid list for
         # the sets semi-filter — materialize so neither re-runs
@@ -787,16 +676,12 @@ class DedupePipeline:
         """
         builders = {
             "signatures": self._build_signatures,
-            "bands": self._build_bands,
             "pairs": self._build_pairs,
             "components": self._build_components,
             "canonical": self._build_canonical,
             "training_set": self._build_training_set,
         }
-        enabled = [
-            s for s in STAGES
-            if s != "bands" or (self.cfg.enable_minhash and self.cfg.checkpoint_bands)
-        ]
+        enabled = list(STAGES)
         if self._shaping_enabled():
             enabled.append("training_set")
         report = {}
@@ -831,17 +716,6 @@ class DedupePipeline:
                     self.spark.conf.set(
                         "spark.sql.shuffle.partitions", base_parts
                     )
-                    prev_fb = getattr(self, "_hashagg_prev_fallback", None)
-                    if prev_fb is not None:
-                        self.spark.conf.set(
-                            "spark.sql.objectHashAggregate.sortBased"
-                            ".fallbackThreshold",
-                            prev_fb,
-                        )
-                        # clear it: a stale threshold surviving on the
-                        # object could be re-applied by a future
-                        # refactor that reuses the pipeline instance
-                        self._hashagg_prev_fallback = None
             if stage == "signatures" and self.cfg.audit_ids:
                 self._audit_ids()
                 mark(self.cfg.ckpt_dir, stage, "_AUDITED")
@@ -888,24 +762,8 @@ class DedupePipeline:
         map-side bucket files.
         """
         cfg = self.cfg
-        try:
-            from dedupe_trees_spark.plans.lineage import _file_rows
-
-            n_docs = sum(
-                n for _, n in _file_rows(f"{cfg.ckpt_dir}/signatures")
-            )
-        except Exception:
-            n_docs = 0
+        n_docs = self._sig_doc_count()
         if not n_docs:
-            if cfg.hashagg_candidates:
-                # the sort-free pass silently degrades to sort-based
-                # aggregation at the 128-entry default threshold — warn
-                # so the flag's whole point isn't lost without signal
-                print(
-                    "WARNING: pairs tuner could not read the signatures "
-                    "row count; hashagg_candidates will fall back to "
-                    "sort-based aggregation at the default threshold"
-                )
             return
         rows_per_doc = (
             1  # exact content-hash bucket
@@ -918,33 +776,8 @@ class DedupePipeline:
             base = int(base_parts)
         except (TypeError, ValueError):
             base = self.spark.sparkContext.defaultParallelism
-        # hash-agg candidates hold one list-buffer map entry per group —
-        # at the ~1 group/row key distribution of a bucket table, a 2 M-row
-        # partition is a 2 M-entry object map (×2: adjacent partial+final),
-        # which measured as a GC collapse at 4 M docs/34 g heap. 500 k rows
-        # per partition keeps the per-task map in the hundreds of MB; the
-        # window build keeps the coarser 2 M target (binary sort buffers,
-        # no per-group objects).
-        rows_per_part = 500_000 if cfg.hashagg_candidates else 2_000_000
-        parts = min(max(base, est_rows // rows_per_part), 4096)
+        parts = min(max(base, est_rows // 2_000_000), 4096)
         self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        if cfg.hashagg_candidates:
-            # the sort-free candidate pass only stays sort-free if the
-            # ObjectHashAggregate never falls back (default threshold:
-            # 128 hash-map entries — i.e. always, for a bucket table).
-            # Size the bound to the per-task group count (~1 group per
-            # bucket row at singleton-dominated key distributions) with
-            # 2× headroom; restored with shuffle.partitions in the
-            # stage's finally.
-            self._hashagg_prev_fallback = self.spark.conf.get(
-                "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                "128",
-            )
-            per_task = max(est_rows // parts, 1) * 2
-            self.spark.conf.set(
-                "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                str(per_task),
-            )
 
     def _measured_substr_density(self) -> float:
         """Winnow fingerprints/doc for the bucket-row estimate, measured

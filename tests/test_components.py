@@ -89,7 +89,9 @@ def test_assign_components_includes_singletons(spark):
 def test_driver_and_distributed_paths_identical(spark, monkeypatch):
     """The r06 bounded driver fast path must emit exactly the relation
     the distributed star contraction converges to — same node set, same
-    min-id labels — for both string and int64 ids."""
+    min-id labels — for string, int64 and non-binary-collated string
+    ids (the last must fall back to the distributed loop: under
+    UTF8_LCASE "a" < "B", the reverse of Python's ordering)."""
     import dedupe_trees_spark.operators.components as C
 
     rng = random.Random(5)
@@ -102,7 +104,13 @@ def test_driver_and_distributed_paths_identical(spark, monkeypatch):
         for _ in range(40)
     ] + [(7, 9), (9, 11)]
 
-    for edges, cols in ((str_edges, "string"), (int_edges, "long")):
+    lcase_edges = [("B", "a"), ("a", "c")]
+
+    for edges, cols in (
+        (str_edges, "string"),
+        (int_edges, "long"),
+        (lcase_edges, "string collate UTF8_LCASE"),
+    ):
         df = spark.createDataFrame(
             edges, f"url_a {cols}, url_b {cols}"
         )

@@ -11,7 +11,6 @@ from dedupe_trees_spark.functions.minhash import _perm_params, minhash_batch, mi
 from dedupe_trees_spark.functions.text import shingle_hashes
 from dedupe_trees_spark.operators.lsh import (
     candidate_pairs,
-    candidate_pairs_hashagg,
     explode_bands,
     minhash_lsh_pairs,
     verify_pairs,
@@ -85,81 +84,6 @@ def test_candidate_pairs_hot_bucket_stays_connected(spark):
     for a, b in pairs:
         parent[find(a)] = find(b)
     assert len({find(x) for x in parent}) == 1
-
-
-def test_candidate_pairs_hashagg_value_identical(spark):
-    """The sort-free hash-agg candidate pass must emit EXACTLY the
-    window build's pair set — topology (cold all-pairs, hot salted
-    star, star-src cold star) and srcs bits included — across every
-    bucket regime in one fixture:
-
-    - bucket A: cold (3 members ≤ cap=8), src=1 → all-pairs
-    - bucket B: hot (40 members > cap=8), src=1 → salted star
-    - bucket C: cold, src=8 with star_srcs=8 → single star
-    - bucket D: hot, src=8 with star_srcs=8 → salted star
-    - bucket E: singleton → no pairs
-    plus the same fixture WITHOUT the src column (dropDuplicates path).
-    """
-    rows = (
-        [(f"a{i}", 0, 11, 1) for i in range(3)]
-        + [(f"b{i:02d}", 1, 22, 1) for i in range(40)]
-        + [(f"c{i}", 2, 33, 8) for i in range(5)]
-        + [(f"d{i:02d}", 3, 44, 8) for i in range(40)]
-        + [("e0", 4, 55, 1)]
-    )
-    bands = spark.createDataFrame(rows, ["url", "band_id", "band_hash", "src"])
-
-    def norm(df):
-        return sorted(map(tuple, df.collect()))
-
-    win = norm(candidate_pairs(bands, cap=8, star_srcs=8))
-    hag = norm(candidate_pairs_hashagg(bands, cap=8, star_srcs=8))
-    assert hag == win
-    assert len(win) > 40  # fixture actually exercises hot buckets
-
-    nosrc = bands.drop("src")
-    assert norm(candidate_pairs_hashagg(nosrc, cap=8)) == norm(
-        candidate_pairs(nosrc, cap=8)
-    )
-
-
-def test_candidate_pairs_hashagg_pipeline_identity(spark, tmp_path):
-    """End-to-end: --hashagg-candidates produces the byte-identical
-    canonical table on a generated corpus with planted duplicates."""
-    from dedupe_trees_spark.config import PipelineConfig
-    from dedupe_trees_spark.datagen import generate_pages
-    from dedupe_trees_spark.io import read_stage
-    from dedupe_trees_spark.plans.pipeline import DedupePipeline
-
-    inp = str(tmp_path / "pages")
-    generate_pages(spark, GenConfig(n_docs=1500, seed=7), partitions=8).write.mode(
-        "overwrite"
-    ).parquet(inp)
-
-    outs = {}
-    for label, flag in (("window", False), ("hashagg", True)):
-        ck = str(tmp_path / f"ck_{label}")
-        cfg = PipelineConfig(
-            input_path=inp, ckpt_dir=ck, bucket_cap=64, hashagg_candidates=flag
-        )
-        DedupePipeline(spark, cfg).run()
-        outs[label] = sorted(
-            map(
-                tuple,
-                read_stage(spark, ck, "canonical")
-                .select("url", "component_id", "rank", "is_canonical")
-                .collect(),
-            )
-        )
-        assert (
-            spark.conf.get(
-                "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                "128",
-            )
-            == "128"
-        ), "tuned fallback threshold leaked past the pairs stage"
-    assert outs["hashagg"] == outs["window"]
-    assert len(outs["window"]) > 1400  # re-crawl url collapse may drop a few
 
 
 def test_verify_pairs_filters_false_positives(spark):
@@ -258,6 +182,10 @@ def test_minhash_kernel_blocked_matches_naive():
         np.array([], dtype=np.int64),
         rng.integers(-(2**62), 2**62, size=70_000, dtype=np.int64),  # > one block
         rng.integers(-(2**62), 2**62, size=17, dtype=np.int64),
+        # two docs larger than the initial scratch buffer (2 blocks):
+        # the first grows it, the second reuses the grown buffer
+        rng.integers(-(2**62), 2**62, size=140_000, dtype=np.int64),
+        rng.integers(-(2**62), 2**62, size=140_000, dtype=np.int64),
     ]
     got = minhash_batch(pd.Series(docs), a, b)
 

@@ -32,7 +32,7 @@ def test_all_stages_ran_and_checkpointed(pipeline_run):
         assert stage_done(ckpt, stage), stage
         assert not report[stage].get("skipped")
         assert report[stage]["rows_out"] > 0
-    # bands are derived inline by default (checkpoint_bands=False)
+    # bands are derived inline by the pairs stage, never checkpointed
     assert "bands" not in report and not stage_done(ckpt, "bands")
 
 
@@ -144,22 +144,6 @@ def test_deduped_pages_sink(pipeline_run):
     assert n_removed > 0
 
 
-def test_checkpoint_bands_flag_restores_band_stage(spark, tmp_path):
-    """checkpoint_bands=True materializes + resumes the band table."""
-    inp = str(tmp_path / "pages")
-    generate_pages(spark, GenConfig(n_docs=300, seed=13), partitions=4).write.mode(
-        "overwrite"
-    ).parquet(inp)
-    cfg = PipelineConfig(
-        input_path=inp, ckpt_dir=str(tmp_path / "ckpt"),
-        bucket_cap=64, checkpoint_bands=True,
-    )
-    report = DedupePipeline(spark, cfg).run()
-    assert stage_done(cfg.ckpt_dir, "bands") and report["bands"]["rows_out"] > 0
-    report2 = DedupePipeline(spark, cfg).run()
-    assert report2["bands"].get("skipped")
-
-
 def test_no_cached_rdds_leak_from_pipeline_run(spark, tmp_path):
     """Cache hygiene: a full pipeline run must leave nothing persisted —
     long-lived drivers loop over runs, so every cached band table would
@@ -203,16 +187,15 @@ def test_fused_pairs_match_per_generator_union(pipeline_run):
     from dedupe_trees_spark.operators.substring import _pairs_from_gram_sets
 
     sigs = read_stage(spark, ckpt, "signatures")
-    if "shingles" not in sigs.columns:
-        # shipped default is store_shingles=False: derive the sets the
-        # same way the verify path does, so the reference union below
-        # verifies against identical shingle sets
-        from dedupe_trees_spark.functions.minhash import shingle_set_udf
-        from dedupe_trees_spark.functions.text import token_hashes
+    # S1 stores `norm`, not shingle sets: derive the sets the same way
+    # the verify path does, so the reference union below verifies
+    # against identical shingle sets
+    from dedupe_trees_spark.functions.minhash import shingle_set_udf
+    from dedupe_trees_spark.functions.text import token_hashes
 
-        sigs = sigs.withColumn(
-            "shingles", shingle_set_udf(cfg.shingle_k)(token_hashes("norm"))
-        )
+    sigs = sigs.withColumn(
+        "shingles", shingle_set_udf(cfg.shingle_k)(token_hashes("norm"))
+    )
     frames = [exact_edges(sigs, id_col="nid", hash_col="content_hash")]
     bands = explode_bands(
         sigs, sig_col="minhash", id_col="nid", bands=cfg.bands, rows=cfg.rows_per_band

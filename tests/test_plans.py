@@ -172,73 +172,13 @@ def test_top_ngrams_take_ordered_and_partial_agg(spark):
     assert "Window" not in plan
 
 
-def test_fused_bucket_build_matches_union_and_is_single_scan(spark):
-    """Round-5 pairs-stage lever: the single-posexplode bucket build
-    must emit the exact row multiset of the 4-branch union (band
-    hashes reuse the same expressions, so this pins band_id/src
-    position arithmetic), and its plan must contain ONE scan of the
-    signatures relation and ONE Generate — the union shape re-scanned
-    S1 once per generator (63% of the 16M candidates kernel)."""
-    from dedupe_trees_spark.config import PipelineConfig
-    from dedupe_trees_spark.datagen import GenConfig, generate_pages
-    from dedupe_trees_spark.operators.lsh import explode_bands
-    from dedupe_trees_spark.plans.pipeline import (
-        _build_bucket_table_fused,
-        build_bucket_table,
-        build_signatures,
-    )
-
-    pages = generate_pages(spark, GenConfig(n_docs=400, seed=13))
-    cfg = PipelineConfig(input_path="x", ckpt_dir="/tmp/unused_fused_ck")
-    sigs = build_signatures(pages, cfg).cache()
-    try:
-        # both bucket paths explode substr_fp WITHOUT array_distinct —
-        # valid only while the signature UDF emits distinct fps
-        # (winnow_text_fps ends in np.unique); pin that invariant here
-        for row in sigs.select("substr_fp").limit(200).collect():
-            fps = row["substr_fp"]
-            assert len(fps) == len(set(fps))
-        bands = explode_bands(
-            sigs, sig_col="minhash", id_col="nid",
-            bands=cfg.bands, rows=cfg.rows_per_band,
-        )
-        union_rows = sorted(
-            map(tuple, build_bucket_table(sigs, cfg, bands_df=bands).collect())
-        )
-        fused = _build_bucket_table_fused(sigs, cfg)
-        fused_rows = sorted(map(tuple, fused.collect()))
-        assert fused_rows == union_rows
-        assert len(fused_rows) > 400 * (cfg.bands + 11)
-        plan = fused._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Generate") == 1  # one posexplode, no union
-        assert "Union" not in plan
-        # bands_df=None routes to the fused build ONLY when the A/B'd
-        # opt-in flag is set (union won the 4M interleaved A/B:
-        # 41.4 s vs 68.4 s median — BENCH/BASELINE.md)
-        cfg_fused = PipelineConfig(
-            input_path="x", ckpt_dir="/tmp/unused_fused_ck",
-            fused_bucket_build=True,
-        )
-        routed = build_bucket_table(sigs, cfg_fused, bands_df=None)
-        rplan = routed._jdf.queryExecution().executedPlan().toString()
-        assert "Union" not in rplan
-        default_routed = build_bucket_table(sigs, cfg, bands_df=None)
-        dplan = default_routed._jdf.queryExecution().executedPlan().toString()
-        assert "Union" in dplan  # default = 4-branch union
-    finally:
-        sigs.unpersist()
-
-
 def test_src_from_band_candidates_value_identical(spark):
     """Dropping src before the pairs exchange and reconstructing it from
     band_id (src_from_band_expr) must emit the exact same (url_a, url_b,
-    srcs) set as shuffling the src column, for BOTH candidate builds."""
+    srcs) set as shuffling the src column."""
     from dedupe_trees_spark.config import PipelineConfig
     from dedupe_trees_spark.datagen import GenConfig, generate_pages
-    from dedupe_trees_spark.operators.lsh import (
-        candidate_pairs,
-        candidate_pairs_hashagg,
-    )
+    from dedupe_trees_spark.operators.lsh import candidate_pairs
     from dedupe_trees_spark.plans.pipeline import (
         SRC_EXACT,
         build_bucket_table,
@@ -250,20 +190,25 @@ def test_src_from_band_candidates_value_identical(spark):
     cfg = PipelineConfig(input_path="x", ckpt_dir="/tmp/unused_srcmap_ck")
     sigs = build_signatures(pages, cfg).cache()
     try:
-        fused = build_bucket_table(sigs, cfg, bands_df=None).cache()
+        # the bucket build explodes substr_fp WITHOUT array_distinct —
+        # valid only while the signature UDF emits distinct fps
+        # (winnow_text_fps ends in np.unique); pin that invariant here
+        for row in sigs.select("substr_fp").limit(200).collect():
+            fps = row["substr_fp"]
+            assert len(fps) == len(set(fps))
+        fused = build_bucket_table(sigs, cfg).cache()
         expr = src_from_band_expr(cfg)
         base = sorted(
             map(tuple, candidate_pairs(fused, id_col="nid", cap=64,
                                        star_srcs=SRC_EXACT).collect())
         )
         assert base  # non-trivial pair set
-        for fn in (candidate_pairs, candidate_pairs_hashagg):
-            got = sorted(
-                map(tuple, fn(fused, id_col="nid", cap=64,
-                              star_srcs=SRC_EXACT,
-                              src_from_band=expr).collect())
-            )
-            assert got == base, fn.__name__
+        got = sorted(
+            map(tuple, candidate_pairs(fused, id_col="nid", cap=64,
+                                       star_srcs=SRC_EXACT,
+                                       src_from_band=expr).collect())
+        )
+        assert got == base
     finally:
         fused.unpersist()
         sigs.unpersist()

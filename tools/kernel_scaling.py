@@ -28,7 +28,7 @@ def run_at(master: str, cores: int, n_docs: int) -> dict:
     from pyspark.sql import functions as F
 
     from dedupe_trees_spark.datagen import GenConfig, generate_pages
-    from dedupe_trees_spark.functions.minhash import signature_struct_udf
+    from dedupe_trees_spark.functions.minhash import shingle_set_udf, signature_struct_udf
     from dedupe_trees_spark.functions.text import normalize_text, token_hashes
     from dedupe_trees_spark.operators.lsh import explode_bands, minhash_lsh_pairs
     from dedupe_trees_spark.session import get_spark
@@ -43,12 +43,8 @@ def run_at(master: str, cores: int, n_docs: int) -> dict:
 
     sig = signature_struct_udf(3, 128, 42, True, 48, 49)
     sig_df = pages.select(
-        "nid", sig(token_hashes("norm"), F.col("norm")).alias("s")
-    ).select(
-        "nid",
-        F.col("s.shingles").alias("shingles"),
-        F.col("s.minhash").alias("minhash"),
-    )
+        "nid", "norm", sig(token_hashes("norm"), F.col("norm")).alias("s")
+    ).select("nid", "norm", F.col("s.minhash").alias("minhash"))
 
     def noop(df):
         df.write.mode("overwrite").format("noop").save()
@@ -58,7 +54,10 @@ def run_at(master: str, cores: int, n_docs: int) -> dict:
     noop(sig_df)
     k1 = time.time() - t0
 
-    sigs = sig_df.persist()
+    # verify sets, re-derived from the text as the pipeline does
+    sigs = sig_df.withColumn(
+        "shingles", shingle_set_udf(3)(token_hashes("norm"))
+    ).persist()
     sigs.count()
     pairs = minhash_lsh_pairs(sigs, id_col="nid", bands=32, rows=4, cap=256, threshold=0.8)
     noop(pairs)  # warmup

@@ -24,7 +24,7 @@ Usage:
   python tools/pairs_profile.py gen N INPUT_DIR [seed]
   python tools/pairs_profile.py full INPUT CKPT [SCRATCH] [CORES] [HEAP]
   python tools/pairs_profile.py pairs INPUT CKPT [SCRATCH] [CORES] [HEAP]
-  python tools/pairs_profile.py kernels CKPT [CORES] [HEAP] [window|hashagg]
+  python tools/pairs_profile.py kernels CKPT [CORES] [HEAP]
 
 Each prints one JSON line (plus run_dedupe's own summary line).
 """
@@ -97,23 +97,22 @@ def cmd_pairs(inp: str, ckpt: str, scratch: str | None, cores: str, heap: str) -
             "heap": heap, "result": res}
 
 
-def cmd_kernels(ckpt: str, cores: str, heap: str, mode: str = "window") -> dict:
+def cmd_kernels(ckpt: str, cores: str, heap: str) -> dict:
     os.environ.update({k: v for k, v in _env(cores, heap).items()
                        if k.startswith("SPARK_GRAFT")})
     from dedupe_trees_spark.config import PipelineConfig
     from dedupe_trees_spark.io import read_stage
-    from dedupe_trees_spark.operators.lsh import (
-        candidate_pairs,
-        candidate_pairs_hashagg,
+    from dedupe_trees_spark.operators.lsh import candidate_pairs
+    from dedupe_trees_spark.plans.pipeline import (
+        SRC_EXACT,
+        DedupePipeline,
+        build_bucket_table,
+        src_from_band_expr,
     )
-    from dedupe_trees_spark.plans.pipeline import DedupePipeline
     from dedupe_trees_spark.session import get_spark
 
     spark = get_spark("pairs_kernels", master=f"local[{cores}]")
-    cfg = PipelineConfig(
-        input_path="unused", ckpt_dir=ckpt,
-        hashagg_candidates=(mode == "hashagg"),
-    )
+    cfg = PipelineConfig(input_path="unused", ckpt_dir=ckpt)
     pipe = DedupePipeline(spark, cfg)
     base_parts = spark.conf.get("spark.sql.shuffle.partitions")
     pipe._tune_shuffle_for_pairs(base_parts)
@@ -126,41 +125,27 @@ def cmd_kernels(ckpt: str, cores: str, heap: str, mode: str = "window") -> dict:
         return round(time.time() - t0, 1)
 
     # warmup: spin up the executor pool + codegen on a small slice
-    noop(pipe._bucket_table(sigs.limit(50_000)))
+    noop(build_bucket_table(sigs.limit(50_000), cfg))
 
-    fused = pipe._bucket_table(sigs)
+    fused = build_bucket_table(sigs, cfg)
     bucket_build_sec = noop(fused)
     n_bucket_rows = fused.count()
-    cand_fn = candidate_pairs_hashagg if mode == "hashagg" else candidate_pairs
-    cands = cand_fn(
-        fused, id_col="nid", cap=cfg.bucket_cap, star_srcs=pipe.SRC_EXACT
+    cands = candidate_pairs(
+        fused, id_col="nid", cap=cfg.bucket_cap, star_srcs=SRC_EXACT
     )
     cand_sec = noop(cands)
     # the r06 pipeline shape: src dropped before the exchange and
     # rebuilt from band_id (value-identical pairs, pytest-pinned).
     # Measured separately so the plain number stays comparable with
     # the r4/r5 certification lines.
-    from dedupe_trees_spark.plans.pipeline import src_from_band_expr
-
-    cands_slim = cand_fn(
-        fused, id_col="nid", cap=cfg.bucket_cap, star_srcs=pipe.SRC_EXACT,
+    cands_slim = candidate_pairs(
+        fused, id_col="nid", cap=cfg.bucket_cap, star_srcs=SRC_EXACT,
         src_from_band=src_from_band_expr(cfg),
     )
     cand_slim_sec = noop(cands_slim)
     spark.conf.set("spark.sql.shuffle.partitions", base_parts)
-    # restore the hashagg fallback threshold the tuner raised, the same
-    # way the pipeline's own finally-block does — without this the
-    # per-task-sized bound leaks into the rest of the session (r5
-    # advisor note)
-    prev_fb = getattr(pipe, "_hashagg_prev_fallback", None)
-    if prev_fb is not None:
-        spark.conf.set(
-            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            prev_fb,
-        )
-        pipe._hashagg_prev_fallback = None
     return {
-        "op": "kernels", "mode": mode, "cores": cores, "heap": heap,
+        "op": "kernels", "cores": cores, "heap": heap,
         "shuffle_partitions": tuned_parts,
         "bucket_rows": n_bucket_rows,
         "bucket_build_noop_sec": bucket_build_sec,
@@ -186,7 +171,6 @@ def main() -> int:
             a[0],
             a[1] if len(a) > 1 else "32",
             a[2] if len(a) > 2 else "34g",
-            a[3] if len(a) > 3 else "window",
         )
     else:
         raise SystemExit(f"unknown op {op!r}")

@@ -42,7 +42,6 @@ def main() -> int:
 
     # per-stage median walls + per-stage E for each N→4N pair
     stages = list(next(iter(by_cores.values()))[0].get("stages", {}))
-    stages = [s for s in stages if s != "bands"]
     if stages:
         stage_med = {
             c: {

@@ -25,7 +25,6 @@ class PipelineConfig:
     enable_minhash: bool = True
     enable_simhash: bool = True
     enable_substring: bool = True
-    simhash_max_hamming: int = 3
     # winnowing guarantee = detect shared runs ≥ k+w−1 = 96 chars; fewer
     # fingerprints (~2/(w+1) of grams) is the main pairs-stage cost lever
     substring_k: int = 48
@@ -54,7 +53,6 @@ class PipelineConfig:
     resolvers: tuple = ("source_order", "path_depth", "copy_pattern", "mod_date", "arbitrary")
     # execution
     resume: bool = True
-    keep_html: bool = False   # drop the binary column after ingest (column pruning)
     # verify the url -> xxhash64 node-id mapping is injective after S1
     # (one countDistinct pass; disable only if the corpus was pre-audited)
     audit_ids: bool = True

@@ -1,4 +1,5 @@
-"""SimHash (64-bit) as a vectorized Arrow/pandas UDF.
+"""SimHash (64-bit): the vectorized batch kernel the S1 signature UDF
+(``functions/minhash.signature_struct_udf``) runs.
 
 Like MinHash, the Python side only sees the JVM-computed token/shingle
 hash arrays (int64): the bit-vote is pure NumPy — unpack each hash into
@@ -18,7 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def simhash_batch(arrays: pd.Series) -> pd.Series:
@@ -76,16 +76,15 @@ def simhash_batch(arrays: pd.Series) -> pd.Series:
     return pd.Series(packed.view(np.int64))
 
 
-@F.pandas_udf(T.LongType())
-def simhash_udf(arrays: pd.Series) -> pd.Series:
-    return simhash_batch(arrays)
-
-
 # 5 bit-blocks of the 64-bit fingerprint: (offset, width)
 SIMHASH_BLOCKS = [(0, 13), (13, 13), (26, 13), (39, 13), (52, 12)]
 
+# the Hamming radius the block layout guarantees (5 blocks, keys on block
+# pairs: ≤ 3 flipped bits leave one pair intact)
+MAX_HAMMING = 3
 
-def simhash_block_keys(col: Column | str, d: int = 3) -> Column:
+
+def simhash_block_keys(col: Column | str, d: int = MAX_HAMMING) -> Column:
     """64-bit simhash → array of per-table bucket keys (block-permutation
     scheme after Manku/Jain/Das Sarma, WWW'07 §3: probe tables keyed on
     block subsets such that every ≤d-bit difference leaves one table's
@@ -106,7 +105,7 @@ def simhash_block_keys(col: Column | str, d: int = 3) -> Column:
     The position in the returned array is the table id (posexplode
     provides it as band_id downstream).
     """
-    if d != 3:
+    if d != MAX_HAMMING:
         raise ValueError("block layout is sized for max_hamming <= 3")
     # key packing: first block shifted past the widest second block, so
     # the two block values can never overlap. Pin the invariant so a

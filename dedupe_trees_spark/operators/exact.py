@@ -4,52 +4,21 @@ Reference semantics: dedupe_trees hashes every file's full contents and
 groups by digest; duplicate sets are groups of size > 1 (SURVEY.md §2.1
 R2–R3, FileCatalog.add_entry/get_groups). Spark-native formulation:
 
-- hash:   ``xxhash64(text)`` — one JVM-side expression, no file I/O loop
-- group:  hash aggregation (Catalyst gives partial+final map-side combine)
+- hash:   ``functions.text.content_hash`` (xxhash64) — one JVM-side
+          expression, no file I/O loop
 - edges:  star edges ``(member → group-min)`` instead of all O(m²) pairs —
           sufficient for connected components and linear in group size,
           which is what keeps a 10^12-row exact-dup stage shuffle-bounded.
+
+The pipeline builds these star edges inside its fused candidate pass
+(exact content-hash buckets, ``star_srcs``); ``exact_edges`` is the
+standalone reference that pass is tested against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from dedupe_trees_spark.functions.text import content_hash
-
-
-def with_content_hash(df: DataFrame, text_col: str = "text", out: str = "content_hash") -> DataFrame:
-    return df.withColumn(out, content_hash(text_col))
-
-
-def dup_sets(
-    df: DataFrame,
-    id_col: str = "url",
-    hash_col: str = "content_hash",
-) -> DataFrame:
-    """Rows that belong to an exact-duplicate set, tagged with set size.
-
-    Window-count formulation keeps full rows (needed by resolvers) while
-    still being a single hash-partitioned shuffle on the digest.
-    """
-    w = Window.partitionBy(hash_col)
-    return (
-        df.withColumn("dup_count", F.count(F.lit(1)).over(w))
-        .filter(F.col("dup_count") > 1)
-    )
-
-
-def dup_set_summary(df: DataFrame, hash_col: str = "content_hash", id_col: str = "url") -> DataFrame:
-    """One row per exact-duplicate set: size + canonical (min id) member."""
-    return (
-        df.groupBy(hash_col)
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.min(id_col).alias("first_member"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
 
 
 def exact_edges(df: DataFrame, id_col: str = "url", hash_col: str = "content_hash") -> DataFrame:

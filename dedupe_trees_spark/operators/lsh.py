@@ -29,17 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dedupe_trees_spark.functions.minhash import band_hash_array, minhash_udf
-
-
-def add_signature(
-    df: DataFrame,
-    shingle_col: str = "shingles",
-    out: str = "minhash",
-    num_perm: int = 128,
-    seed: int = 42,
-) -> DataFrame:
-    return df.withColumn(out, minhash_udf(num_perm, seed)(F.col(shingle_col)))
+from dedupe_trees_spark.functions.minhash import band_hash_array
 
 
 def explode_bands(
@@ -247,18 +237,3 @@ def verify_pairs(
     )
     return out
 
-
-def minhash_lsh_pairs(
-    signatures: DataFrame,
-    id_col: str = "url",
-    shingle_col: str = "shingles",
-    sig_col: str = "minhash",
-    bands: int = 32,
-    rows: int = 4,
-    cap: int = 256,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """signatures (with shingle sets + minhash) → verified near-dup pairs."""
-    bands_df = explode_bands(signatures, sig_col=sig_col, id_col=id_col, bands=bands, rows=rows)
-    cands = candidate_pairs(bands_df, id_col=id_col, cap=cap)
-    return verify_pairs(cands, signatures, threshold, id_col=id_col, shingle_col=shingle_col)

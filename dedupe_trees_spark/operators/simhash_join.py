@@ -21,16 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dedupe_trees_spark.functions.simhash import hamming_dist, simhash_block_keys, simhash_udf
+from dedupe_trees_spark.functions.simhash import MAX_HAMMING, hamming_dist, simhash_block_keys
 from dedupe_trees_spark.operators.lsh import candidate_pairs
 
 
-def add_simhash(df: DataFrame, shingle_col: str = "shingles", out: str = "simhash") -> DataFrame:
-    return df.withColumn(out, simhash_udf(F.col(shingle_col)))
-
-
 def explode_block_keys(
-    df: DataFrame, sim_col: str = "simhash", id_col: str = "url", max_hamming: int = 3
+    df: DataFrame, sim_col: str = "simhash", id_col: str = "url",
+    max_hamming: int = MAX_HAMMING,
 ) -> DataFrame:
     """simhash → (url, band_id, band_hash) rows — band_id is the probe
     table, band_hash its block-pair key — reusing the LSH bucket schema
@@ -47,7 +44,7 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str = "url",
     sim_col: str = "simhash",
-    max_hamming: int = 3,
+    max_hamming: int = MAX_HAMMING,
     cap: int = 256,
 ) -> DataFrame:
     """(url, simhash) → pairs with Hamming(simhash) ≤ max_hamming."""

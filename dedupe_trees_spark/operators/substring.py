@@ -33,13 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dedupe_trees_spark.functions.text import char_ngrams
 from dedupe_trees_spark.operators.lsh import candidate_pairs
-
-
-def gram_hashes(col, k: int) -> F.Column:
-    """Stride-1 k-char gram hashes → array<bigint> (JVM-side)."""
-    return F.transform(char_ngrams(col, k=k, stride=1), lambda s: F.xxhash64(s))
 
 
 def _sliding_min(h: np.ndarray, w: int) -> np.ndarray:
@@ -79,14 +73,6 @@ def _winnow_batch(arrays: pd.Series, w: int) -> pd.Series:
             continue
         out.append(np.unique(_sliding_min(h, w)))
     return pd.Series(out)
-
-
-def winnow_udf(w: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _winnow(arrays: pd.Series) -> pd.Series:
-        return _winnow_batch(arrays, w)
-
-    return _winnow
 
 
 _RB_BASE = np.uint64(0x100000001B3)     # FNV-ish odd multiplier
@@ -144,7 +130,7 @@ def _rolling_hash_core(vals: np.ndarray, k: int) -> np.ndarray:
     return _finalize_hashes(h)
 
 
-def _rolling_gram_hashes(data: bytes, k: int) -> np.ndarray:
+def _rolling_byte_hashes(data: bytes, k: int) -> np.ndarray:
     """Stride-1 k-byte rolling hashes of a byte string (O(n), see
     ``_rolling_hash_core``), murmur-finalized so equal windows — and
     only equal windows, w.h.p. — share a hash. Byte-level, so it is
@@ -164,7 +150,7 @@ def winnow_text_fps(texts: pd.Series, k: int, w: int) -> pd.Series:
         if not t:
             out.append(np.empty(0, dtype=np.int64))
             continue
-        h = _rolling_gram_hashes(t.encode("utf-8"), k)
+        h = _rolling_byte_hashes(t.encode("utf-8"), k)
         if len(h) <= w:
             out.append(np.array([h.min()], dtype=np.uint64).view(np.int64))
             continue
@@ -577,7 +563,7 @@ def _merge_intervals(s: np.ndarray, e: np.ndarray) -> np.ndarray:
 
 def _rolling_cp_hashes(cp: np.ndarray, k: int) -> np.ndarray:
     """Stride-1 k-code-point rolling hashes (uint64 wraparound), the
-    code-point twin of ``_rolling_gram_hashes`` — O(n) via
+    code-point twin of ``_rolling_byte_hashes`` — O(n) via
     ``_rolling_hash_core`` (value-identical to the previous k-pass
     formulation). Caller guarantees ``len(cp) >= k``."""
     return _rolling_hash_core(cp.astype(np.uint64), k)

@@ -231,15 +231,6 @@ def repetition_features(
     ).drop(toks_c, n_c, lines_c, bg_c)
 
 
-def rolling_fingerprint(col: Column | str, window: int = 16) -> Column:
-    """Document fingerprint: xxhash64 over the document's char-window
-    hash minima (a winnowing-style content signature, JVM-side)."""
-    from dedupe_trees_spark.functions.text import char_ngrams
-
-    grams = char_ngrams(col, k=window, stride=window // 2)
-    return F.xxhash64(F.array_min(F.transform(grams, lambda g: F.xxhash64(g))))
-
-
 # Gopher-rule battery (Rae et al. 2021, "Scaling Language Models:
 # Gopher", appendix A1.1) — the standard web-text quality filter set.
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]

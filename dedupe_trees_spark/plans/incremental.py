@@ -5,8 +5,9 @@ corpus every crawl": a new crawl increment (10^8–10^10 pages) must be
 deduplicated against the already-resolved corpus while touching only
 batch-proportional data. This module adds that workflow on top of the
 batch pipeline, reusing its exact operator semantics (the same
-``build_signatures`` / ``build_bucket_table`` / ``score_candidates``
-functions the full pipeline runs — not a re-implementation).
+``build_signatures`` / ``collapse_recrawls`` / ``build_bucket_table`` /
+``score_candidates`` / ``resolve_canonical`` functions the full pipeline
+runs — not a re-implementation).
 
 The index IS a pipeline checkpoint directory plus one extra table:
 
@@ -19,8 +20,8 @@ The index IS a pipeline checkpoint directory plus one extra table:
 ``init_index`` = run the batch pipeline once, then persist the bucket
 table. ``incremental_update`` then processes each new batch:
 
-    1. S1 over the batch only; in-batch re-crawl rows collapsed with the
-       audit's keep-key; rows whose url is already indexed are skipped
+    1. S1 over the batch only; in-batch re-crawl rows collapsed by the
+       audit's ``collapse_recrawls``; rows whose url is already indexed are skipped
        (idempotent re-ingest); a nid collision against the index aborts
        with the same rerun-at-128-bits advice as the batch audit.
     2. Candidates = new×new (the fused single-exchange candidate pass
@@ -89,7 +90,6 @@ from dedupe_trees_spark.io import (
     stage_path,
     write_stage,
 )
-from dedupe_trees_spark.operators import resolve as R
 from dedupe_trees_spark.operators.components import assign_components
 from dedupe_trees_spark.operators.lsh import candidate_pairs
 from dedupe_trees_spark.plans.pipeline import (
@@ -97,11 +97,12 @@ from dedupe_trees_spark.plans.pipeline import (
     DedupePipeline,
     build_bucket_table,
     build_signatures,
+    collapse_recrawls,
+    resolve_canonical,
     score_candidates,
 )
 
 BUCKETS = "buckets"
-META_COLS = ["url", "warc_ts", "lang", "source", "source_order", "n_chars"]
 
 
 def init_index(spark: SparkSession, cfg: PipelineConfig) -> dict:
@@ -113,29 +114,6 @@ def init_index(spark: SparkSession, cfg: PipelineConfig) -> dict:
         write_stage(build_bucket_table(sigs, cfg), cfg.ckpt_dir, BUCKETS)
     report[BUCKETS] = {"stage": BUCKETS, "built": True}
     return report
-
-
-def _collapse_batch(sigs: DataFrame) -> DataFrame:
-    """In-batch re-crawl collapse: one row per nid, same deterministic
-    keep-key as the batch audit (latest crawl wins, content hash then
-    the scalar metadata totalize the order)."""
-    keep_key = F.struct(
-        *[F.col(c) for c in ("warc_ts",) if c in sigs.columns],
-        F.col("content_hash"),
-        *[
-            F.col(c)
-            for c in ("source_order", "source", "lang")
-            if c in sigs.columns
-        ],
-    )
-    w = Window.partitionBy("nid")
-    return (
-        sigs.withColumn("_k", keep_key)
-        .withColumn("_kmax", F.max("_k").over(w))
-        .filter(F.col("_k") == F.col("_kmax"))
-        .drop("_k", "_kmax")
-        .dropDuplicates(["nid"])
-    )
 
 
 def _cross_candidates(
@@ -244,7 +222,7 @@ def incremental_update(
     # ---- S1 over the batch, collapse, collision/skip audit ----------------
     t0 = time.time()
     sigs_idx = read_stage(spark, index_dir, "signatures")
-    batch_sigs = spill(_collapse_batch(build_signatures(new_pages, cfg)), "sigs_raw")
+    batch_sigs = spill(collapse_recrawls(build_signatures(new_pages, cfg)), "sigs_raw")
     matches = spill(
         sigs_idx.select("nid", F.col("url").alias("_iurl")).join(
             F.broadcast(batch_sigs.select("nid", "url")), "nid"
@@ -372,22 +350,14 @@ def incremental_update(
     t0 = time.time()
     clusters_full = spark.read.parquet(f"{staging}/clusters_full")
     touched_comps = comp.select("component_id").dropDuplicates()
-    meta = [c for c in META_COLS if c in sigs_idx.columns]
     members_map = spill(
         clusters_full.join(F.broadcast(touched_comps), "component_id", "left_semi"),
         "members_map",
     )
-    member_sigs = all_sigs.select("nid", *meta).join(
+    member_sigs = all_sigs.join(
         F.broadcast(members_map.select("nid")), "nid", "left_semi"
     )
-    members = members_map.join(member_sigs, "nid")
-    resolved = spill(
-        R.resolve(members, list(cfg.resolvers)).select(
-            "component_id", "url", *[c for c in meta if c != "url"],
-            "rank", "is_canonical",
-        ),
-        "resolved",
-    )
+    resolved = spill(resolve_canonical(member_sigs, members_map, cfg), "resolved")
     canonical_old = read_stage(spark, index_dir, "canonical")
     # rows of touched clusters appear under their pre-merge label (a
     # touched root) or — when re-running a partially committed batch —

@@ -35,6 +35,15 @@ checkpoint, never from an in-memory plan — that is what makes resume
 (``_SUCCESS``-gated) trivially correct, bounds Catalyst lineage, and
 gives each stage an independent shuffle budget. The html binary column
 is dropped at S1 so every later scan benefits from column pruning.
+
+The stage computations are module-level ``DataFrame → DataFrame``
+functions over ``PipelineConfig`` — ``build_signatures`` (S1),
+``build_pairs`` (S3), ``resolve_canonical`` (S5) and
+``collapse_recrawls`` (the S1 audit's repair). ``plans/incremental.py``
+and the dedup contract queries (``queries.q_dedup_canonical_full`` and
+the minhash/simhash pair leaves) run the same functions;
+``DedupePipeline`` adds checkpoints, scratch spills, the pairs shuffle
+tuner and metrics around them.
 """
 
 from __future__ import annotations
@@ -205,12 +214,13 @@ def build_bucket_table(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
             )
         )
     if cfg.enable_simhash:
+        from dedupe_trees_spark.functions.simhash import MAX_HAMMING
         from dedupe_trees_spark.operators.simhash_join import explode_block_keys
 
         keys = explode_block_keys(
             sigs.select("nid", "simhash"),
             sim_col="simhash", id_col="nid",
-            max_hamming=cfg.simhash_max_hamming,
+            max_hamming=MAX_HAMMING,
         )
         bucket_frames.append(
             keys.select(
@@ -319,12 +329,9 @@ def score_candidates(
             is_mh & j_ok, F.lit("minhash")
         )
         if cfg.enable_simhash:
-            from dedupe_trees_spark.functions.simhash import hamming_dist
+            from dedupe_trees_spark.functions.simhash import MAX_HAMMING, hamming_dist
 
-            ham_ok = (
-                hamming_dist(F.col("_sim_a"), F.col("_sim_b"))
-                <= cfg.simhash_max_hamming
-            )
+            ham_ok = hamming_dist(F.col("_sim_a"), F.col("_sim_b")) <= MAX_HAMMING
             kind = kind.when(is_sh & j_ok & ham_ok, F.lit("simhash"))
         if cfg.enable_substring:
             kind = kind.when(is_ss, F.lit("substr"))
@@ -343,6 +350,77 @@ def score_candidates(
         )
     return scored.filter(F.col("kind").isNotNull()).select(
         "url_a", "url_b", "kind", "score"
+    )
+
+
+def build_pairs(sigs: DataFrame, cfg: PipelineConfig, spill=None) -> DataFrame:
+    """S3: signatures → verified edges (url_a, url_b, kind, score) over
+    nids — the fused candidate pass over ``build_bucket_table``, then
+    ``score_candidates``.
+
+    ``spill(df, name) -> DataFrame`` materializes the two multiply-read
+    intermediates: ``"cands"`` (it feeds the edge assembly AND the
+    candidate-nid list for the sets semi-filter, so neither re-runs
+    candidate generation) and ``"sets"`` (see ``score_candidates``).
+    None skips both."""
+    # url_a/url_b column names are the pair-plumbing convention; from
+    # here on they carry compact nids, not url strings
+    cands = candidate_pairs(
+        build_bucket_table(sigs, cfg), id_col="nid", cap=cfg.bucket_cap,
+        star_srcs=SRC_EXACT, src_from_band=src_from_band_expr(cfg),
+    )
+    if spill is not None:
+        cands = spill(cands, "cands")
+    return score_candidates(cands, sigs, cfg, spill=spill)
+
+
+def resolve_canonical(
+    sigs: DataFrame, comps: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """S5: (nid, component_id) cluster map + S1 metadata → the canonical
+    table (component_id, url, metadata, rank, is_canonical) under
+    ``cfg.resolvers``."""
+    meta_cols = [
+        c
+        for c in ["url", "warc_ts", "lang", "source", "source_order", "n_chars"]
+        if c in sigs.columns
+    ]
+    resolved = R.resolve(
+        sigs.select("nid", *meta_cols).join(comps, "nid"),
+        list(cfg.resolvers),
+    )
+    return resolved.select(
+        "component_id", "url", *[c for c in meta_cols if c != "url"],
+        "rank", "is_canonical",
+    )
+
+
+def collapse_recrawls(sigs: DataFrame) -> DataFrame:
+    """Re-crawl collapse: one row per nid. Latest crawl wins; content
+    hash breaks exact-timestamp ties; the remaining scalar metadata
+    (source ordering, source, lang) totalizes the order so rows tying on
+    (warc_ts, content_hash) — same crawl instant, same bytes, different
+    ingest lineage — still pick ONE fully determined survivor (every
+    signature column is a pure function of (url, norm), so rows equal on
+    this key are equal on all remaining columns and the final
+    dropDuplicates collapses true value-duplicates only). Inputs without
+    a timestamp column (minimal jsonl/csv) fall back to the later keys
+    alone — still deterministic."""
+    keep_key = F.struct(
+        *[F.col(c) for c in ("warc_ts",) if c in sigs.columns],
+        F.col("content_hash"),
+        *[
+            F.col(c)
+            for c in ("source_order", "source", "lang")
+            if c in sigs.columns
+        ],
+    )
+    return (
+        sigs.withColumn("_k", keep_key)
+        .withColumn("_kmax", F.max("_k").over(Window.partitionBy("nid")))
+        .filter(F.col("_k") == F.col("_kmax"))
+        .drop("_k", "_kmax")
+        .dropDuplicates(["nid"])  # byte-identical leftovers
     )
 
 
@@ -417,27 +495,13 @@ class DedupePipeline:
         scratch = self._scratch_dir()
         self.pairs_phases: dict[str, float] = {}
 
-        # url_a/url_b column names are the pair-plumbing convention; from
-        # here on they carry compact nids, not url strings
-        cands = candidate_pairs(
-            build_bucket_table(sigs, cfg), id_col="nid", cap=cfg.bucket_cap,
-            star_srcs=SRC_EXACT, src_from_band=src_from_band_expr(cfg),
-        )
-        # cands feeds the edge assembly AND the candidate-nid list for
-        # the sets semi-filter — materialize so neither re-runs
-        # candidate generation (parquet vs localCheckpoint per corpus
-        # size; see _spill)
-        t0 = time.time()
-        cands = self._spill(cands, f"{scratch}/cands", scratch_local)
-        self.pairs_phases["cands_sec"] = round(time.time() - t0, 1)
-
         def spill_timed(df: DataFrame, name: str) -> DataFrame:
             t = time.time()
             out = self._spill(df, f"{scratch}/{name}", scratch_local)
             self.pairs_phases[f"{name}_sec"] = round(time.time() - t, 1)
             return out
 
-        return score_candidates(cands, sigs, cfg, spill=spill_timed)
+        return build_pairs(sigs, cfg, spill=spill_timed)
 
     def _build_components(self) -> DataFrame:
         cfg = self.cfg
@@ -453,15 +517,7 @@ class DedupePipeline:
         cfg = self.cfg
         sigs = read_stage(self.spark, cfg.ckpt_dir, "signatures")
         comps = read_stage(self.spark, cfg.ckpt_dir, "components")
-        meta_cols = [c for c in ["url", "warc_ts", "lang", "source", "source_order", "n_chars"] if c in sigs.columns]
-        resolved = R.resolve(
-            sigs.select("nid", *meta_cols).join(comps, "nid"),
-            list(cfg.resolvers),
-        )
-        return resolved.select(
-            "component_id", "url", *[c for c in meta_cols if c != "url"],
-            "rank", "is_canonical",
-        )
+        return resolve_canonical(sigs, comps, cfg)
 
     def _shaping_enabled(self) -> bool:
         c = self.cfg
@@ -596,8 +652,8 @@ class DedupePipeline:
            used to surface as self-pairs, join fan-out in the verify
            stage, and — worst — the same url in both the canonical
            set and the removal manifest, which a delete sink would
-           then drop entirely. Repair: keep the row with the max
-           (warc_ts, content_hash) per nid (latest crawl wins;
+           then drop entirely. Repair: ``collapse_recrawls`` keeps the
+           row with the max (warc_ts, content_hash) per nid (latest crawl wins;
            content-hash breaks exact-timestamp ties deterministically;
            byte-identical leftovers collapse by value) and swap the
            rewritten checkpoint in.
@@ -629,35 +685,7 @@ class DedupePipeline:
         if not flags["dup"]:
             return
         dup_nids = agg.filter(F.col("n") > 1).select("nid")
-        flagged = sigs.join(dup_nids, "nid", "left_semi")
-        # latest crawl wins; content hash breaks exact-timestamp ties;
-        # the remaining scalar metadata (source ordering, source, lang)
-        # totalizes the order so rows tying on (warc_ts, content_hash)
-        # — same crawl instant, same bytes, different ingest lineage —
-        # still pick ONE fully determined survivor (every signature
-        # column is a pure function of (url, norm), so rows equal on
-        # this key are equal on all remaining columns and the final
-        # dropDuplicates collapses true value-duplicates only).
-        # Inputs without a timestamp column (minimal jsonl/csv) fall
-        # back to the later keys alone — still deterministic.
-        keep_key = F.struct(
-            *[F.col(c) for c in ("warc_ts",) if c in sigs.columns],
-            F.col("content_hash"),
-            *[
-                F.col(c)
-                for c in ("source_order", "source", "lang")
-                if c in sigs.columns
-            ],
-        )
-        winners = (
-            flagged.withColumn("_k", keep_key)
-            .withColumn(
-                "_kmax", F.max("_k").over(Window.partitionBy("nid"))
-            )
-            .filter(F.col("_k") == F.col("_kmax"))
-            .drop("_k", "_kmax")
-            .dropDuplicates(["nid"])  # byte-identical leftovers
-        )
+        winners = collapse_recrawls(sigs.join(dup_nids, "nid", "left_semi"))
         clean = sigs.join(dup_nids, "nid", "left_anti").unionByName(winners)
         tmp = f"{self.cfg.ckpt_dir}/_sig_collapsed"
         write_stage(clean, self.cfg.ckpt_dir, "_sig_collapsed")

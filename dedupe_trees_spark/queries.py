@@ -443,8 +443,7 @@ def _doc_shingle_sets(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame
     from dedupe_trees_spark.functions.minhash import shingle_set_udf
     from dedupe_trees_spark.functions.text import token_hashes
 
-    # consumers fan out (signature + bands + verify sides) — compute the
-    # shingle UDF once per query instead of once per consumer subtree
+    # compute the shingle UDF once per query (see _materialize)
     return _materialize(
         load(spark, sf_dir, "documents").select(
             "doc_id", shingle_set_udf(k)(token_hashes("text")).alias("shingles")
@@ -547,22 +546,56 @@ SELECT doc_a, doc_b, jaccard FROM jpairs
 """
 
 
-def q_minhash_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash→LSH→verified near-dup pairs. The oracle is the exact
-    brute-force Jaccard SQL — a match PROVES 100% LSH recall on this
-    dataset at the configured signature config (128 perms, 32×4 bands;
-    precision is exact by construction since candidates are verified)."""
-    from dedupe_trees_spark.operators.lsh import add_signature, minhash_lsh_pairs
+def _leaf_cfg(**switches):
+    """PipelineConfig for the dedup leaves: the signature config at its
+    defaults, the given generators switched off, and the oracle's
+    resolver window (source_order, then url)."""
+    from dedupe_trees_spark.config import PipelineConfig
 
-    sets = _doc_shingle_sets(spark, sf_dir)
-    sigs = add_signature(sets, num_perm=128, seed=42)
-    pairs = minhash_lsh_pairs(
-        sigs, id_col="doc_id", bands=32, rows=4, cap=256, threshold=0.8
+    return PipelineConfig(
+        input_path="", ckpt_dir="", resolvers=("source_order", "arbitrary"),
+        **switches,
     )
-    return pairs.select(
-        F.col("url_a").alias("doc_a"),
-        F.col("url_b").alias("doc_b"),
-        F.col("score").alias("jaccard"),
+
+
+def _stage_edges(spark: SparkSession, sf_dir: str, cfg):
+    """The pipeline's own S1 → S3 (``build_signatures`` → ``build_pairs``)
+    over `documents_as_pages`, with ``_materialize`` standing in for the
+    S1 checkpoint and the pairs-stage spills. Returns (pages, sigs,
+    edges); edges are keyed by nid."""
+    from dedupe_trees_spark.plans.pipeline import build_pairs, build_signatures
+
+    pages = documents_as_pages(spark, sf_dir)
+    sigs = _materialize(build_signatures(pages, cfg))
+    edges = build_pairs(sigs, cfg, spill=lambda df, _name: _materialize(df))
+    return pages, sigs, edges
+
+
+def _stage_pairs(spark: SparkSession, sf_dir: str, cfg) -> DataFrame:
+    """`_stage_edges` as (doc_a < doc_b, jaccard) rows. Exact-hash edges
+    carry score 1.0, which is their Jaccard: equal text, equal sets."""
+    pages, sigs, edges = _stage_edges(spark, sf_dir, cfg)
+    ids = sigs.select("nid", "url").join(pages.select("url", "doc_id"), "url")
+    return (
+        edges.join(ids.select(F.col("nid").alias("url_a"), F.col("doc_id").alias("_da")), "url_a")
+        .join(ids.select(F.col("nid").alias("url_b"), F.col("doc_id").alias("_db")), "url_b")
+        .select(
+            F.least("_da", "_db").alias("doc_a"),
+            F.greatest("_da", "_db").alias("doc_b"),
+            F.col("score").alias("jaccard"),
+        )
+    )
+
+
+def q_minhash_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash→LSH→verified near-dup pairs, through the pipeline's stage
+    functions with simhash and substring switched off (`_stage_pairs`).
+    The oracle is the exact brute-force Jaccard SQL — a match PROVES
+    100% LSH recall on this dataset at the default signature config
+    (128 perms, 32×4 bands; precision is exact by construction since
+    candidates are verified)."""
+    return _stage_pairs(
+        spark, sf_dir, _leaf_cfg(enable_simhash=False, enable_substring=False)
     )
 
 
@@ -635,9 +668,11 @@ FROM chains GROUP BY doc_a, doc_b
 
 
 def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-≤3 candidate pairs, Jaccard-verified at 0.8.
-    (No SQL equality twin — simhash is not SQL-expressible; driver
-    records a rows-only check. Correctness is covered by pytest
+    """SimHash Hamming-≤3 candidate pairs, Jaccard-verified at 0.8,
+    through the pipeline's stage functions with minhash and substring
+    switched off (`_stage_pairs`). (No SQL equality oracle — simhash is
+    not SQL-expressible; driver records a rows-only check. Correctness
+    is covered by pytest
     unit/recall tests plus a CONTAINMENT oracle:
     tests/test_diff_harness.py asserts every emitted pair is in the
     brute-force J≥0.8 set with the identical Jaccard value.)
@@ -648,63 +683,38 @@ def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — a precision improvement, now pinned by the containment test
     so any future drift fails CI instead of passing unadjudicated.
     """
-    from dedupe_trees_spark.operators.lsh import verify_pairs
-    from dedupe_trees_spark.operators.simhash_join import add_simhash, simhash_pairs
-
-    sets = _doc_shingle_sets(spark, sf_dir)
-    sims = add_simhash(sets)
-    cands = simhash_pairs(sims, id_col="doc_id", max_hamming=3, cap=256)
-    verified = verify_pairs(
-        cands.select(F.col("url_a"), F.col("url_b")),
-        sets.withColumnRenamed("doc_id", "url"),
-        threshold=0.8,
-        kind="simhash",
-    )
-    return verified.select(
-        F.col("url_a").alias("doc_a"), F.col("url_b").alias("doc_b"),
-        F.col("score").alias("jaccard"),
+    return _stage_pairs(
+        spark, sf_dir, _leaf_cfg(enable_minhash=False, enable_substring=False)
     )
 
 
 def q_dedup_canonical_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAGSHIP: full near-dup clustering + resolver-chain resolution.
+    """FLAGSHIP: full near-dup clustering + resolver-chain resolution,
+    run through the pipeline's own stage functions over
+    `documents_as_pages`: `_stage_edges` (exact-hash ∪ LSH-verified
+    Jaccard-0.8 edges; simhash and substring switched off) →
+    ``assign_components`` → ``resolve_canonical`` (source_order,
+    arbitrary). Oracle: recursive-CTE transitive closure over the
+    brute-force Jaccard graph with the same window — an end-to-end SQL
+    check of the production stages. Component ids are not exposed
+    (engine uses min-nid labels, oracle min-doc_id); per-doc
+    cluster_size + is_canonical are label-free.
 
-    exact-hash edges ∪ LSH-verified Jaccard-0.8 edges → connected
-    components → window resolution (source_order, arbitrary). Oracle:
-    recursive-CTE transitive closure over the brute-force Jaccard graph
-    with the same window — an end-to-end SQL twin of the whole engine.
-    Component ids are not exposed (engine uses min-url labels, oracle
-    min-doc_id); per-doc cluster_size + is_canonical are label-free.
+    S1 normalizes text (lower-case, collapse whitespace) before hashing
+    and shingling, while the oracle shingles raw text. The two agree
+    because the fixture text is already normalized: ``normalize_text``
+    changes 0 of the 500/500/5000 documents at sf0.001/0.01/0.1, and 0
+    of 800 ``datagen`` documents at each of seeds 1, 5 and 10.
     """
     from dedupe_trees_spark.operators.components import assign_components
-    from dedupe_trees_spark.operators.exact import exact_edges
-    from dedupe_trees_spark.operators.lsh import add_signature, minhash_lsh_pairs
-    from dedupe_trees_spark.operators.resolve import resolve
+    from dedupe_trees_spark.plans.pipeline import resolve_canonical
 
-    from dedupe_trees_spark.functions.minhash import shingle_set_udf
-    from dedupe_trees_spark.functions.text import token_hashes
-
-    pages = documents_as_pages(spark, sf_dir)
-    # sets fans out into exact edges, signatures, verify and resolve —
-    # one shingle-UDF pass instead of one per consumer subtree
-    sets = _materialize(
-        pages.select(
-            "url", "doc_id", "source_order",
-            F.xxhash64("text").alias("content_hash"),
-            shingle_set_udf(3)(token_hashes("text")).alias("shingles"),
-        )
-    )
-    exact = exact_edges(sets, id_col="url", hash_col="content_hash")
-    sigs = add_signature(sets, num_perm=128, seed=42)
-    near = minhash_lsh_pairs(sigs, id_col="url", bands=32, rows=4, cap=256, threshold=0.8)
-    edges = exact.select("url_a", "url_b").unionByName(near.select("url_a", "url_b"))
-    comps = assign_components(sets.select("url"), edges, id_col="url")
-    resolved = resolve(
-        sets.select("url", "doc_id", "source_order").join(comps, "url"),
-        ["source_order", "arbitrary"],
-    )
+    cfg = _leaf_cfg(enable_simhash=False, enable_substring=False)
+    pages, sigs, edges = _stage_edges(spark, sf_dir, cfg)
+    comps = assign_components(sigs.select("nid"), edges, id_col="nid")
+    canon = resolve_canonical(sigs, comps, cfg)
     w = Window.partitionBy("component_id")
-    return resolved.select(
+    return canon.join(pages.select("url", "doc_id"), "url").select(
         "doc_id",
         F.count(F.lit(1)).over(w).alias("cluster_size"),
         F.col("is_canonical"),

@@ -31,6 +31,7 @@ DIFFABLE = [
     "substring_dup_pairs",
     "substring_extent_pairs",
     "sessionize_events",
+    "dedup_canonical_full",
 ]
 
 

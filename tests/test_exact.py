@@ -1,11 +1,7 @@
 from __future__ import annotations
 
-from dedupe_trees_spark.operators.exact import (
-    dup_set_summary,
-    dup_sets,
-    exact_edges,
-    with_content_hash,
-)
+from dedupe_trees_spark.functions.text import content_hash
+from dedupe_trees_spark.operators.exact import exact_edges
 
 
 def _pages(spark):
@@ -17,20 +13,9 @@ def _pages(spark):
         ("u5", "other text"),
         ("u6", "unique text"),
     ]
-    return with_content_hash(spark.createDataFrame(rows, ["url", "text"]))
-
-
-def test_dup_sets_keeps_only_duplicated_rows(spark):
-    out = dup_sets(_pages(spark)).collect()
-    urls = sorted(r["url"] for r in out)
-    assert urls == ["u1", "u2", "u3", "u4", "u5"]
-    counts = {r["url"]: r["dup_count"] for r in out}
-    assert counts["u1"] == 3 and counts["u4"] == 2
-
-
-def test_dup_set_summary(spark):
-    out = {r["first_member"]: r["dup_count"] for r in dup_set_summary(_pages(spark)).collect()}
-    assert out == {"u1": 3, "u4": 2}
+    return spark.createDataFrame(rows, ["url", "text"]).withColumn(
+        "content_hash", content_hash("text")
+    )
 
 
 def test_exact_edges_star_shape(spark):

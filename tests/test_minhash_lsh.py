@@ -6,15 +6,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from dedupe_trees_spark.config import PipelineConfig
 from dedupe_trees_spark.datagen import GenConfig, generate_pages
 from dedupe_trees_spark.functions.minhash import _perm_params, minhash_batch, minhash_udf
 from dedupe_trees_spark.functions.text import shingle_hashes
 from dedupe_trees_spark.operators.lsh import (
     candidate_pairs,
     explode_bands,
-    minhash_lsh_pairs,
     verify_pairs,
 )
+from dedupe_trees_spark.plans.pipeline import build_pairs, build_signatures
 
 
 def test_minhash_batch_deterministic_and_jaccard_estimate():
@@ -123,20 +124,23 @@ def _brute_force_pairs(pdf, k=3, threshold=0.8):
 
 
 def test_lsh_recall_on_synthetic_pages(spark):
-    """SURVEY §5.3 recall harness: pipeline pairs vs brute-force exact
-    Jaccard at the same shingle/signature config; target recall ≥ 0.99."""
-    cfg = GenConfig(n_docs=1500, seed=42)
-    pages = generate_pages(spark, cfg, partitions=8).select("url", "text")
-    sigs = pages.withColumn("shingles", shingle_hashes("text", k=3))
-    from dedupe_trees_spark.operators.lsh import add_signature
-
-    sigs = add_signature(sigs, num_perm=128, seed=42)
+    """SURVEY §5.3 recall harness: the pipeline's S1 → S3
+    (build_signatures → build_pairs, minhash generator on) vs brute-force
+    exact Jaccard at the same shingle/signature config; target recall
+    ≥ 0.99."""
+    gen = GenConfig(n_docs=1500, seed=42)
+    pages = generate_pages(spark, gen, partitions=8).select("url", "text")
+    cfg = PipelineConfig(
+        input_path="", ckpt_dir="", enable_simhash=False,
+        enable_substring=False, bucket_cap=64,
+    )
+    sigs = build_signatures(pages, cfg).cache()
+    url = {r["nid"]: r["url"] for r in sigs.select("nid", "url").collect()}
     got = {
-        (r["url_a"], r["url_b"])
-        for r in minhash_lsh_pairs(
-            sigs, bands=32, rows=4, cap=64, threshold=0.8
-        ).collect()
+        tuple(sorted((url[r["url_a"]], url[r["url_b"]])))
+        for r in build_pairs(sigs, cfg).collect()
     }
+    sigs.unpersist()
     truth = _brute_force_pairs(pages.toPandas(), k=3, threshold=0.8)
     assert truth, "fixture must contain planted near-dup pairs"
     missed = truth - got

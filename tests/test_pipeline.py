@@ -183,6 +183,7 @@ def test_fused_pairs_match_per_generator_union(pipeline_run):
         explode_bands,
         verify_pairs,
     )
+    from dedupe_trees_spark.functions.simhash import MAX_HAMMING
     from dedupe_trees_spark.operators.simhash_join import simhash_pairs
     from dedupe_trees_spark.operators.substring import _pairs_from_gram_sets
 
@@ -206,7 +207,7 @@ def test_fused_pairs_match_per_generator_union(pipeline_run):
     sh = (
         simhash_pairs(
             sigs.select("nid", "simhash"), id_col="nid",
-            max_hamming=cfg.simhash_max_hamming, cap=cfg.bucket_cap,
+            max_hamming=MAX_HAMMING, cap=cfg.bucket_cap,
         )
         .select("url_a", "url_b")
         .withColumn("kind", F.lit("simhash"))

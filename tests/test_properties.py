@@ -2,8 +2,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dedupe_trees_spark.functions.text import shingle_hashes
-from dedupe_trees_spark.operators.lsh import add_signature, minhash_lsh_pairs
+from dedupe_trees_spark.config import PipelineConfig
+from dedupe_trees_spark.plans.pipeline import build_pairs, build_signatures
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,21 +38,24 @@ def test_permutation_invariance_of_canonical_output(spark):
 
 def test_band_count_monotonicity(spark):
     """More bands (same rows-per-band) ⇒ candidate recall non-decreasing:
-    verified pair set must grow monotonically with band count."""
+    the pipeline's verified pair set (build_pairs over one S1 relation)
+    must grow monotonically with band count."""
     d = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").alias("url"), "text"
+        F.col("doc_id").cast("string").alias("url"), "text"
     )
-    sigs = add_signature(
-        d.withColumn("shingles", shingle_hashes("text", k=3)), num_perm=128, seed=42
-    ).cache()
-    found = {}
-    for bands in (4, 16, 32):
-        found[bands] = {
-            (r["url_a"], r["url_b"])
-            for r in minhash_lsh_pairs(
-                sigs, bands=bands, rows=4, cap=256, threshold=0.8
-            ).collect()
-        }
+    cfgs = {
+        bands: PipelineConfig(
+            input_path="", ckpt_dir="", bands=bands,
+            enable_simhash=False, enable_substring=False,
+        )
+        for bands in (4, 16, 32)
+    }
+    # S1 does not depend on the band count
+    sigs = build_signatures(d, cfgs[32]).cache()
+    found = {
+        bands: {(r["url_a"], r["url_b"]) for r in build_pairs(sigs, cfg).collect()}
+        for bands, cfg in cfgs.items()
+    }
     assert found[4] <= found[16] <= found[32]
     sigs.unpersist()
 

@@ -4,9 +4,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from dedupe_trees_spark.config import PipelineConfig
 from dedupe_trees_spark.functions.simhash import simhash_batch
-from dedupe_trees_spark.functions.text import shingle_hashes
-from dedupe_trees_spark.operators.simhash_join import add_simhash, simhash_pairs
+from dedupe_trees_spark.operators.simhash_join import simhash_pairs
+from dedupe_trees_spark.plans.pipeline import build_signatures
+
+# S1 with the simhash generator on: its `simhash` column feeds simhash_pairs
+_S1 = PipelineConfig(input_path="", ckpt_dir="", enable_substring=False)
 
 
 def _ham(a, b) -> int:
@@ -36,10 +40,7 @@ def test_simhash_pairs_end_to_end(spark):
         ("u2", "the quick brown fox jumps over the lazy dog " * 8),  # identical
         ("u3", "completely different content about spark engines and shuffles " * 8),
     ]
-    df = spark.createDataFrame(texts, ["url", "text"]).withColumn(
-        "shingles", shingle_hashes("text", k=3)
-    )
-    df = add_simhash(df)
+    df = build_signatures(spark.createDataFrame(texts, ["url", "text"]), _S1)
     pairs = [(r["url_a"], r["url_b"], r["hamming"]) for r in simhash_pairs(df).collect()]
     assert ("u1", "u2", 0) in pairs
     assert all({a, b} != {"u1", "u3"} for a, b, _ in pairs)
@@ -92,10 +93,9 @@ def test_simhash_near_duplicate_detected(spark):
     toks2 = list(toks)
     toks2[150] = "changed"
     near = " ".join(toks2)
-    df = spark.createDataFrame(
-        [("a", base), ("b", near)], ["url", "text"]
-    ).withColumn("shingles", shingle_hashes("text", k=3))
-    df = add_simhash(df)
+    df = build_signatures(
+        spark.createDataFrame([("a", base), ("b", near)], ["url", "text"]), _S1
+    )
     out = simhash_pairs(df, max_hamming=3).collect()
     assert len(out) == 1
     assert out[0]["hamming"] <= 3

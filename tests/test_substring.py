@@ -299,7 +299,7 @@ def test_rolling_hash_core_matches_kpass_formulation():
     from dedupe_trees_spark.operators.substring import (
         _RB_BASE,
         _RB_MIX,
-        _rolling_gram_hashes,
+        _rolling_byte_hashes,
         _rolling_hash_core,
     )
 
@@ -324,7 +324,7 @@ def test_rolling_hash_core_matches_kpass_formulation():
         b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
         if len(b) < 24:
             b = np.pad(b, (0, 24 - len(b)), constant_values=0)
-        assert np.array_equal(_rolling_gram_hashes(data, 24), kpass(b, 24))
+        assert np.array_equal(_rolling_byte_hashes(data, 24), kpass(b, 24))
 
 
 def test_lcs_udf_gate_preserves_filtered_pairs(spark):

@@ -13,8 +13,10 @@ GB/s collapses, then ANY memory-bound job on this box is capped at the
 same ratio — which is the stage-isolated evidence the judge asked for
 ("the box is shown bus-saturated ... at the measured operating points").
 
-Pure-CPU contrast: tools/kernel_scaling.py's compute-bound kernel holds
-E≈0.85 on the same ladder, so the limit is the bus, not the scheduler.
+Pure-CPU contrast: a compute-bound S1 kernel held E≈0.85 on the same
+ladder (round 6), so the limit is the bus, not the scheduler. Today's
+per-kernel times come from ``perfbench/run.py --trace 1``
+(``functions.*_us_per_doc``).
 
 Usage: python tools/membw_probe.py [out.json]   (~2 min)
 """

@@ -2814,7 +2814,10 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedupe_trees_spark.sources.warc import read_pages_warc
 
     root = _warc_fixture(spark, sf_dir)
-    pages = read_pages_warc(spark, f"{root}/*.warc.gz")
+    # the directory, not a glob: Spark's sink-metadata probe logs a
+    # FileNotFoundException trace for a glob path. The _DONE marker is
+    # skipped because its name starts with "_".
+    pages = read_pages_warc(spark, root)
     return pages.select(
         F.regexp_extract("url", r"/d(\d+)\.html$", 1).cast("long").alias("doc_id"),
         "url",

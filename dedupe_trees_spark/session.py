@@ -2,7 +2,9 @@
 
 Local mode is the test/bench harness; the same config block is what we'd
 ship in ``spark-submit --conf`` on a real multi-executor cluster (AQE on,
-skew-join on, Arrow on, UTC session TZ for oracle comparability).
+skew-join on, Arrow on, UTC session TZ for oracle comparability, a
+generated-code class cache of 4096 entries so repeated runs in one JVM
+reuse their compiled stage plans).
 """
 
 from __future__ import annotations
@@ -60,6 +62,16 @@ def get_spark(
         # blocks pile up in storage memory first. 2min bounds that
         # accumulation on any deployment; no effect on results.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # whole-stage codegen classes live in a per-JVM LRU cache (the
+        # driver in local mode, each executor on a cluster) whose default
+        # of 100 entries is below one DedupePipeline.run's ~130 distinct
+        # code bodies. An LRU smaller than a cyclic working set hits 0%,
+        # so every warm run recompiled 123-125 classes (Janino, then the
+        # JIT). Measured working sets in one JVM: a batch run ~130; plus
+        # the incremental path and 13 query leaves ~750;
+        # tools/check_contract.py over every query 1047. 4096 leaves
+        # ~3.9x headroom over the largest.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # shuffle/spill dir: a single local disk does not scale with thread
     # count the way a real cluster's per-node disks do — benchmarks point

@@ -164,7 +164,7 @@ def _parse_warc(data: bytes, source: str) -> list[tuple]:
 
 
 def read_pages_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC file(s)/glob → DataFrame in PAGES_SCHEMA column order.
+    """WARC file(s)/directory/glob → DataFrame in PAGES_SCHEMA column order.
 
     text = html_to_text(payload) (shared codegen extraction), lang
     left NULL (the corpus-level lang-id operator fills it downstream),

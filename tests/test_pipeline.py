@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import itertools
 import shutil
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -157,6 +158,20 @@ def test_no_cached_rdds_leak_from_pipeline_run(spark, tmp_path):
     DedupePipeline(spark, cfg).run()
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), f"pipeline leaked cached RDDs: {after - before}"
+
+
+def test_repeat_run_reuses_generated_code(pipeline_run, tmp_path):
+    """A second run in the same JVM must hit the whole-stage codegen
+    class cache instead of recompiling its plans. With Spark's default
+    of 100 entries, below one run's ~130 code bodies, the LRU evicted
+    every class before its next use: 124-125 compiles per warm run."""
+    spark, gcfg, cfg, pipe, report, inp, ckpt = pipeline_run
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    DedupePipeline(spark, replace(cfg, ckpt_dir=str(tmp_path / "first"))).run()
+    before = compiles.getCount()
+    DedupePipeline(spark, replace(cfg, ckpt_dir=str(tmp_path / "second"))).run()
+    n = compiles.getCount() - before
+    assert n <= 8, f"second run compiled {n} classes"
 
 
 def test_scratch_intermediates_cleaned(pipeline_run):

@@ -812,22 +812,30 @@ class DedupePipeline:
         from the committed S1 output instead of assumed: actual density
         is ~2·len/(w+1) — length-dependent — so a flat constant
         undercounts long-document corpora and under-partitions the
-        job's biggest exchange. A LocalLimit-bounded sample (Spark
-        stops scanning once each task fills its quota; one small job,
-        ~10k rows) is exact enough for a partition-count decision;
+        job's biggest exchange. Read from the parquet footers, with no
+        Spark job: the ``substr_fp`` leaf column's value count over the
+        row count. A value count has one entry per empty list too, and
         array_distinct at explode time only shrinks it, so the estimate
         errs safely high."""
+        import pyarrow.parquet as pq
+
+        from dedupe_trees_spark.plans.lineage import _file_rows
+
+        values = rows = 0
         try:
-            row = (
-                read_stage(self.spark, self.cfg.ckpt_dir, "signatures")
-                .select(F.size("substr_fp").alias("s"))
-                .limit(10_000)
-                .agg(F.avg("s"))
-                .first()
-            )
-            return float(row[0]) if row and row[0] is not None else 80.0
+            for f, n in _file_rows(f"{self.cfg.ckpt_dir}/signatures"):
+                meta = pq.read_metadata(f)
+                rows += n
+                for g in range(meta.num_row_groups):
+                    group = meta.row_group(g)
+                    values += sum(
+                        group.column(c).num_values
+                        for c in range(group.num_columns)
+                        if group.column(c).path_in_schema.startswith("substr_fp.")
+                    )
         except Exception:
-            return 80.0  # column absent / unreadable — prior round's flat prior
+            return 80.0  # unreadable — prior round's flat prior
+        return values / rows if values else 80.0  # column absent: the same prior
 
     # ------------------------------------------------------------- accessors
 

@@ -43,10 +43,12 @@ _FANOUT_MAX_BYTES = 256 << 20
 # partitions — the exchange plus 32 task launches cost MORE than any
 # parallelism they buy, and several queries load 2-3 such tables each.
 # Measured at sf0.1 (9-query dimension-table sweep, 3 warm reps):
-# ~4.1-4.4 s → ~3.3-3.5 s with the floor. 64 KB keeps every table a
-# UDF ever scans (documents, embeddings, events, part, customer …)
-# above the floor, so the §8 fan-out behavior is unchanged where it
-# matters.
+# ~4.1-4.4 s → ~3.3-3.5 s with the floor. The floor does not clear
+# every table a UDF scans: the documents fixture is 65,049 B at sf0.01
+# and 65,515 B at sf0.001, just under 64 KB (65,536 B), so it is not
+# fanned out at those scales. Forcing the fan-out there measured slower
+# (noop sink, warm, median of 5: lang_id_classifier 1.40 → 1.63 s,
+# tfidf_keywords 0.91 → 1.11 s, span_scrubbed_docs 2.12 → 2.47 s).
 _FANOUT_MIN_BYTES = 64 << 10
 
 
@@ -3160,3 +3162,11 @@ SELECT doc_id, lang AS pred_lang, score FROM ranked WHERE rn = 1
 
 QUERIES.update({"lang_id_classifier": q_lang_id_classifier})
 ORACLES.update({"lang_id_classifier": SQL_LANG_ID_CLASSIFIER})
+
+# The contract check compares only the first 50 queries, in registry
+# order, with their DuckDB oracles. A query with no equality oracle in
+# ORACLES (simhash_dup_pairs, winnow_substring_pairs, embedding_lsh_topk,
+# embedding_ivf_topk) checks nothing in one of those slots, so those go
+# last; the dict order changes no query and no oracle.
+for _name in [n for n in QUERIES if n not in ORACLES]:
+    QUERIES[_name] = QUERIES.pop(_name)

@@ -4,7 +4,10 @@ Local mode is the test/bench harness; the same config block is what we'd
 ship in ``spark-submit --conf`` on a real multi-executor cluster (AQE on,
 skew-join on, Arrow on, UTC session TZ for oracle comparability, a
 generated-code class cache of 4096 entries so repeated runs in one JVM
-reuse their compiled stage plans).
+reuse their compiled stage plans, and ``dedupe_trees_spark.worker_daemon``
+as the Python worker daemon so UDF tasks stop re-reading ``pyspark.zip``).
+Executors must be able to import ``dedupe_trees_spark`` to start that
+daemon, as they already must to unpickle the engine's UDFs.
 """
 
 from __future__ import annotations
@@ -72,6 +75,11 @@ def get_spark(
         # tools/check_contract.py over every query 1047. 4096 leaves
         # ~3.9x headroom over the largest.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # the Python worker daemon: PySpark's own, with every forked worker
+        # re-reading a zip archive on sys.path only when it changed, where
+        # stock workers re-read pyspark.zip ~15 times per UDF task
+        # (0.15-0.29 s of CPU each; see worker_daemon.py)
+        .config("spark.python.daemon.module", "dedupe_trees_spark.worker_daemon")
     )
     # shuffle/spill dir: a single local disk does not scale with thread
     # count the way a real cluster's per-node disks do — benchmarks point

@@ -175,12 +175,22 @@ def test_top_ngrams_take_ordered_and_partial_agg(spark):
 def test_src_from_band_candidates_value_identical(spark):
     """Dropping src before the pairs exchange and reconstructing it from
     band_id (src_from_band_expr) must emit the exact same (url_a, url_b,
-    srcs) set as shuffling the src column."""
+    srcs) set as shuffling the src column. That rests on
+    build_bucket_table's band_id namespaces deciding src for every row,
+    at any band count: pinned with all four generators on, at the
+    default bands=32 and at bands=16."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
     from dedupe_trees_spark.config import PipelineConfig
     from dedupe_trees_spark.datagen import GenConfig, generate_pages
     from dedupe_trees_spark.operators.lsh import candidate_pairs
     from dedupe_trees_spark.plans.pipeline import (
         SRC_EXACT,
+        SRC_MINHASH,
+        SRC_SIMHASH,
+        SRC_SUBSTR,
         build_bucket_table,
         build_signatures,
         src_from_band_expr,
@@ -209,6 +219,22 @@ def test_src_from_band_candidates_value_identical(spark):
                                        src_from_band=expr).collect())
         )
         assert got == base
+        for bands in (32, 16):
+            bcfg = replace(cfg, bands=bands)
+            assert bcfg.enable_minhash and bcfg.enable_simhash and bcfg.enable_substring
+            by_src = {
+                r.src: r
+                for r in build_bucket_table(sigs, bcfg)
+                .groupBy("src")
+                .agg(
+                    F.sum((F.col("src") != src_from_band_expr(bcfg)).cast("long")).alias("bad"),
+                    F.countDistinct("band_id").alias("band_ids"),
+                )
+                .collect()
+            }
+            assert set(by_src) == {SRC_EXACT, SRC_MINHASH, SRC_SIMHASH, SRC_SUBSTR}
+            assert by_src[SRC_MINHASH].band_ids == bands
+            assert {s: r.bad for s, r in by_src.items()} == dict.fromkeys(by_src, 0)
     finally:
         fused.unpersist()
         sigs.unpersist()
